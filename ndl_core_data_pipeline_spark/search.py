@@ -9,16 +9,33 @@ Reference: resources/embedding/rag_search.py —
 - neighbor merge (:50-65): extend each surviving chunk with the previous/
   next chunk of the same document, trimming the 100-char overlap.
 
-Spark form: the query vector broadcasts (a one-row literal); scoring is a
-JVM-side expression over array<float>; top-k is TakeOrderedAndProject;
-the elbow is a window computation over k rows; the neighbor merge is
-lag/lead over (origin, chunk_index) — no collect() anywhere, and the
+Spark form:
+- the query vector enters the plan as one array<double> literal built in
+  a single JVM call (``operators._util.double_array_lit``), so building
+  a query costs the same for any embedding width;
+- the query's norm is computed once on the driver (the same left fold
+  and sqrt as ``_norm``, so bit-identical) and enters as a scalar
+  literal; per row the executors fold only the dot product and the
+  row's own norm;
+- top-k is TakeOrderedAndProject; the elbow is a window computation over
+  its k rows; the neighbor merge is lag/lead over (origin, chunk_index)
+  joined to the hits; the best-first order is a second top-k over the
+  <= k joined rows, not a global sort.
+
+A query runs 3 jobs in 5 stages: the chunk table's shuffle for the
+lag/lead; the corpus scan with its top-k and elbow cut, broadcast to the
+join; and the join with the final top-k. No collect() anywhere, and the
 heavy side (the corpus) is never moved except the k winners.
 """
 
 from __future__ import annotations
 
+import itertools
+import math
+
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from .operators._util import double_array_lit
 
 DEFAULT_K = 15  # rag_search.py:14
 ELBOW_SENSITIVITY = 2.5  # rag_search.py:77
@@ -37,11 +54,19 @@ def _dot(a, b):
 def _norm(a):
     return F.sqrt(
         F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+            a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
         )
     )
+
+
+def _query_norm(query_vec: list[float]) -> float:
+    """``_norm`` of the query, on the driver: the same left fold of
+    squares from 0.0 and a correctly rounded sqrt, so the literal is
+    bit-identical to what the executors would compute per row."""
+    acc = 0.0
+    for v in map(float, query_vec):
+        acc = acc + v * v
+    return math.sqrt(acc)
 
 
 def cosine_topk(
@@ -53,8 +78,10 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector. Emits
     (id, cos_sim, distance) with distance = 1 - cosine."""
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q))
+    q = double_array_lit(query_vec)
+    cos = _dot(F.col(vec_col), q) / (
+        _norm(F.col(vec_col)) * F.lit(_query_norm(query_vec))
+    )
     return (
         corpus.select(F.col(id_col), cos.alias("cos_sim"))
         .withColumn("distance", 1.0 - F.col("cos_sim"))
@@ -134,14 +161,15 @@ N_PLANES = 12  # LSH signature bits for the approximate path
 def _lsh_bits(vec_col, dim: int, n_planes: int = N_PLANES):
     """Deterministic random-hyperplane signature (same hyperplane_matrix as
     operators/vector.lsh_bucket_assignment). The matrix is driver-side
-    constants embedded as literal arrays — per row the executors do
-    n_planes zip_with dot products and rebuild nothing."""
+    constants embedded as literal arrays, one JVM call per plane — per
+    row the executors do n_planes zip_with dot products and rebuild
+    nothing."""
     from .operators.vector import hyperplane_matrix
 
     planes = hyperplane_matrix(n_planes, dim)
     bits = []
     for j in range(n_planes):
-        h = F.array(*[F.lit(v) for v in planes[j]])
+        h = double_array_lit(planes[j])
         h_dot = F.aggregate(
             F.zip_with(vec_col, h, lambda x, hv: x.cast("double") * hv),
             F.lit(0.0),
@@ -174,7 +202,8 @@ def ann_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: score only vectors whose bucket is within
-    `probe_hamming` bits of the query's bucket (multi-probe LSH), then
+    `probe_hamming` bits of the query's bucket (multi-probe LSH: all
+    sum(C(N_PLANES, r) for r <= probe_hamming) buckets), then
     exact-rerank the candidates. The candidate filter prunes the scan —
     at scale, bucket-partitioned storage turns it into partition pruning —
     and the expensive cosine runs on a small fraction of the corpus."""
@@ -182,15 +211,19 @@ def ann_topk(
 
     from .operators.vector import hyperplane_matrix
 
+    if probe_hamming < 0:
+        raise ValueError(f"probe_hamming must be >= 0, got {probe_hamming}")
     q = np.asarray(query_vec, dtype=np.float64)
     planes = np.asarray(hyperplane_matrix(N_PLANES, len(q)))
     sig = 0
     for j in range(N_PLANES):
         if float(q @ planes[j]) > 0:
             sig |= 1 << j
-    probes = [sig]
-    if probe_hamming >= 1:
-        probes += [sig ^ (1 << b) for b in range(N_PLANES)]
+    probes = [
+        sig ^ sum(1 << b for b in flipped)
+        for r in range(min(probe_hamming, N_PLANES) + 1)
+        for flipped in itertools.combinations(range(N_PLANES), r)
+    ]
     cands = indexed.filter(F.col("lsh_bucket").isin(probes))
     return cosine_topk(cands, query_vec, k, vec_col=vec_col, id_col=id_col)
 
@@ -255,4 +288,4 @@ def search(
     vec_id. Returns (chunk_id, cos_sim, merged_text, ...)."""
     hits = elbow_cut(cosine_topk(corpus, query_vec, k))
     hits = hits.withColumnRenamed("vec_id", "chunk_id")
-    return neighbor_merge(hits, chunks).orderBy(F.desc("cos_sim"))
+    return neighbor_merge(hits, chunks).orderBy(F.desc("cos_sim")).limit(k)

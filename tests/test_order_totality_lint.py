@@ -312,6 +312,10 @@ ALLOWLIST: dict[tuple[str, str, str, str], str] = {
     ("search.py", "cosine_topk", "limit", "distance,F.asc(id_col)"):
         "output-dup: every output column (id, cos_sim, distance) is a "
         "function of the key columns",
+    ("search.py", "search", "limit", "cos_sim"):
+        "tie-safe: chunk_id is the chunk table's key, so the join emits "
+        "at most k rows and limit(k) drops nothing; cos_sim ties only "
+        "permute the presentation order",
     ("sources/conversations.py", "group_conversations", "window", "seq"):
         "unique: the parser emits a strictly increasing seq per doc_path",
 }

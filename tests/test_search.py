@@ -2,10 +2,17 @@
 
 from __future__ import annotations
 
+import math
+import struct
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from ndl_core_data_pipeline_spark import search
+from ndl_core_data_pipeline_spark.operators._util import double_array_lit
+from ndl_core_data_pipeline_spark.operators.vector import hyperplane_matrix
 
 
 @pytest.fixture(scope="module")
@@ -64,12 +71,16 @@ def test_neighbor_merge(spark):
     assert merged0 == "A" * 150 + "B" * 50
 
 
-def test_search_end_to_end(spark, corpus):
-    df, vecs = corpus
-    chunks = spark.createDataFrame(
+@pytest.fixture(scope="module")
+def chunks(spark):
+    return spark.createDataFrame(
         [(i, f"doc{i // 5}", i % 5, f"chunk-{i:02d} " * 30) for i in range(50)],
         "chunk_id BIGINT, origin_identifier STRING, chunk_index INT, chunk STRING",
     )
+
+
+def test_search_end_to_end(corpus, chunks):
+    df, vecs = corpus
     out = search.search(df, chunks, [float(x) for x in vecs[3]], k=10)
     rows = out.collect()
     assert rows, "elbow cut must keep at least the best hit"
@@ -215,3 +226,178 @@ def test_cosine_near_dup_multi_chunk_tiles_match_brute_force(
         .collect()
     }
     assert want and got == want
+
+
+# ------------------------------------------------ query literal and plan shape
+
+
+@contextmanager
+def _ansi(spark, enabled: bool):
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(enabled).lower())
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def _bits(v: float) -> bytes:
+    return struct.pack("<d", v)
+
+
+def test_double_array_lit_round_trips_bit_exact(spark):
+    vals = [-0.0, 5e-324, 1e-05, 1.5e300, float("nan"), float("inf"), float("-inf")]
+    got = spark.range(1).select(double_array_lit(vals).alias("q")).first()["q"]
+    assert [_bits(v) for v in got] == [_bits(v) for v in vals]
+
+
+def _fold_cos(row, q) -> float:
+    """cosine as the executors compute it: left folds from 0.0 in
+    element order, then one division."""
+    dot = rn = qn = 0.0
+    for x, y in zip(row, q):
+        dot = dot + float(x) * y
+    for x in row:
+        rn = rn + float(x) * float(x)
+    for y in q:
+        qn = qn + y * y
+    return dot / (math.sqrt(rn) * math.sqrt(qn))
+
+
+def test_cosine_topk_equals_sequential_fold(corpus):
+    df, vecs = corpus
+    q = [float(x) for x in np.random.default_rng(3).normal(size=vecs.shape[1])]
+    got = search.cosine_topk(df, q, k=len(vecs)).collect()
+    assert len(got) == len(vecs)
+    for r in got:
+        assert r["cos_sim"] == _fold_cos(vecs[r["vec_id"]], q)
+
+
+def test_zero_norm_query_raises_under_ansi(spark, corpus):
+    df, vecs = corpus
+    with _ansi(spark, True), pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        search.cosine_topk(df, [0.0] * vecs.shape[1]).collect()
+
+
+@pytest.mark.parametrize("ansi", [True, False])
+def test_empty_query_yields_null_cos_sim(spark, corpus, ansi):
+    df, vecs = corpus
+    with _ansi(spark, ansi):
+        got = search.cosine_topk(df, [], k=len(vecs)).collect()
+    assert len(got) == len(vecs)
+    assert all(r["cos_sim"] is None for r in got)
+
+
+def test_search_build_py4j_calls_independent_of_dim(corpus, chunks, monkeypatch):
+    """Building the plan costs a fixed number of JVM round trips: the
+    query vector crosses in one call whatever its width."""
+    from py4j import clientserver, java_gateway, protocol
+
+    df, _ = corpus
+    calls = [0]
+
+    def counting(send):
+        def send_command(self, command, *args, **kwargs):
+            # proxy releases fire whenever Python frees a JVM handle
+            if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+                calls[0] += 1
+            return send(self, command, *args, **kwargs)
+
+        return send_command
+
+    for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+        monkeypatch.setattr(cls, "send_command", counting(cls.send_command))
+
+    def build_calls(dim: int) -> int:
+        q = [float(i % 7) - 3.0 for i in range(dim)]
+        search.search(df, chunks, q)  # first use resolves JVM functions
+        before = calls[0]
+        search.search(df, chunks, q)
+        return calls[0] - before
+
+    n8, n512 = build_calls(8), build_calls(512)
+    assert n8 > 0 and n8 == n512
+
+
+def test_search_plan_has_no_range_sort(corpus, chunks):
+    """The final best-first ordering is a top-k over the <= k joined
+    rows, not a global sort with its range-partition sampling job."""
+    from ndl_core_data_pipeline_spark.plans import explain_formatted
+
+    df, vecs = corpus
+    out = search.search(df, chunks, [float(x) for x in vecs[3]], k=10)
+    rows = out.collect()
+    plan = explain_formatted(out)
+    assert "rangepartitioning" not in plan.lower()
+    assert plan.count("TakeOrderedAndProject") >= 2
+    sims = [r["cos_sim"] for r in rows]
+    assert sims == sorted(sims, reverse=True)
+
+
+# ------------------------------------------------------------- LSH buckets
+
+
+def _lsh_bits_per_element(vec_col, dim: int):
+    """lsh_index's bucket built with one F.lit per hyperplane element —
+    the form the one-call literal replaced, kept as the reference."""
+    planes = hyperplane_matrix(search.N_PLANES, dim)
+    bits = []
+    for j in range(search.N_PLANES):
+        h = F.array(*[F.lit(v) for v in planes[j]])
+        h_dot = F.aggregate(
+            F.zip_with(vec_col, h, lambda x, hv: x.cast("double") * hv),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bits.append(F.when(h_dot > 0, F.lit(1)).otherwise(F.lit(0)) * (2**j))
+    return sum(bits[1:], bits[0]).cast("bigint")
+
+
+def test_lsh_index_buckets_match_per_element_literals(corpus):
+    df, vecs = corpus
+    rows = (
+        search.lsh_index(df)
+        .withColumn("ref", _lsh_bits_per_element(F.col("embedding"), vecs.shape[1]))
+        .collect()
+    )
+    assert len({r["lsh_bucket"] for r in rows}) > 1
+    assert [r["lsh_bucket"] for r in rows] == [r["ref"] for r in rows]
+
+
+def _bucket(v) -> int:
+    sig = 0
+    for j, h in enumerate(hyperplane_matrix(search.N_PLANES, len(v))):
+        acc = 0.0
+        for x, hv in zip(v, h):
+            acc = acc + x * hv
+        if acc > 0:
+            sig |= 1 << j
+    return sig
+
+
+def test_ann_topk_probes_every_bucket_within_radius(spark):
+    rng = np.random.default_rng(11)
+    q = [float(x) for x in rng.normal(size=8)]
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(300)]
+    indexed = search.lsh_index(
+        spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    )
+    qsig = _bucket(q)
+    hamming = {i: bin(_bucket(v) ^ qsig).count("1") for i, v in rows}
+    found = {}
+    for radius in (0, 1, 2, 3):
+        found[radius] = {
+            r["vec_id"]
+            for r in search.ann_topk(
+                indexed, q, k=len(rows), probe_hamming=radius
+            ).collect()
+        }
+        assert found[radius] == {i for i, h in hamming.items() if h <= radius}
+    # radius 2 reaches vectors that radius 1 misses
+    assert found[2] - found[1]
+
+
+def test_ann_topk_rejects_negative_probe_hamming(corpus):
+    df, vecs = corpus
+    with pytest.raises(ValueError, match="probe_hamming"):
+        search.ann_topk(df, [float(x) for x in vecs[0]], probe_hamming=-1)
