@@ -48,147 +48,66 @@ def build_registry() -> Registry:
     from .operators import (
         aggregates,
         arrays,
+        bpe,
+        checks,
         dedup,
         eventwindows,
         files,
         filters,
+        graphs,
         groupedmap,
         joins,
         multimodal,
         pii,
         setops,
+        sketches,
         sorts,
         textops,
         tpch,
+        training,
         vector,
+        warehouse,
         windows,
     )
 
     reg = Registry()
     for module in (
-        dedup,
-        vector,
-        textops,
-        sorts,
-        setops,
-        arrays,
-        pii,
-        files,
-        groupedmap,
-        multimodal,
-        eventwindows,
-        tpch,
-        filters,
-        joins,
         aggregates,
+        arrays,
+        bpe,
+        checks,
+        dedup,
+        eventwindows,
+        files,
+        filters,
+        graphs,
+        groupedmap,
+        joins,
+        multimodal,
+        pii,
+        setops,
+        sketches,
+        sorts,
+        textops,
+        tpch,
+        training,
+        vector,
+        warehouse,
         windows,
     ):
         module.register(reg)
-    vector.register_round2(reg)
-    textops.register_round2(reg)
-    dedup.register_round2(reg)
-    tpch.register_round2(reg)
-    tpch.register_round6(reg)
-    from .operators import bpe, training
-
-    training.register(reg)
-    bpe.register(reg)
-    textops.register_round6(reg)
-    training.register_round6(reg)
-    joins.register_round6(reg)
-    aggregates.register_round6(reg)
-    vector.register_round6(reg)
-    eventwindows.register_round6(reg)
-    dedup.register_round6(reg)
-    training.register_round6b(reg)
-    groupedmap.register_round6(reg)
-    windows.register_round6(reg)
-    setops.register_round6(reg)
-    filters.register_round6(reg)
-    aggregates.register_round6b(reg)
-    from .operators import checks
-
-    checks.register(reg)
-    pii.register_round6(reg)
-    from .operators import graphs, warehouse
-
-    warehouse.register(reg)
-    graphs.register(reg)
-    arrays.register_round6(reg)
-    aggregates.register_round6c(reg)
-    windows.register_round6b(reg)
-    eventwindows.register_round6b(reg)
-    vector.register_round6b(reg)
-    arrays.register_round6b(reg)
-    aggregates.register_round6d(reg)
-    warehouse.register_round6b(reg)
-    aggregates.register_round6e(reg)
-    graphs.register_round6b(reg)
-    eventwindows.register_round6c(reg)
-    filters.register_round6b(reg)
-    textops.register_round6c(reg)
-    vector.register_round7(reg)
-    from .operators import sketches
-
-    sketches.register(reg)
-    graphs.register_round7(reg)
-    windows.register_round7(reg)
-    sorts.register_round7(reg)
-    textops.register_round7(reg)
-    joins.register_round7(reg)
-    dedup.register_round7(reg)
-    aggregates.register_round7(reg)
-    from .operators import warehouse as _wh
-
-    _wh.register_round7(reg)
-    sketches.register_round7b(reg)
-    eventwindows.register_round7(reg)
-    _wh.register_round7b(reg)
-    textops.register_round7b(reg)
-    aggregates.register_round7b(reg)
-    eventwindows.register_round7b(reg)
-    vector.register_round7b(reg)
-    sketches.register_round7c(reg)
-    textops.register_round7c(reg)
-    _wh.register_round7c(reg)
-    vector.register_round7c(reg)
     _prioritize(reg)
     return reg
 
 
-# The driver verifies the FIRST 50 registered queries per round, so insertion
-# order controls which queries accumulate CORRECTNESS rows. Rotation policy,
-# computed from the CORRECTNESS_r*.json records the driver leaves in the repo
-# root: queries whose last driver-green row is oldest go first (never-green
-# and brand-new queries lead), so every query re-accumulates a fresh row every
-# few rounds instead of staying green-by-assumption. Queries whose SEMANTICS
-# changed this round are forced to the front regardless of record age — their
-# old green rows attest to the old definition.
-# Each pin records the round it was placed in; a pin SELF-RELEASES once the
-# query earns a driver-green row in a round >= its pin round (the fresh row
-# attests the new definition, so keeping the pin would put a fresh-green query
-# ahead of genuinely stale ones — exactly the staleness-monotonicity violation
-# that turned the suite red across the r11→r12 driver boundary).
-_FORCE_FRONT: list[tuple[str, int]] = [
-    # round 11: quality_constraint_report gained the
-    # vector_elements_valid(embedding) rule row (one MORE output row — a
-    # semantic change; its prior green rows attest the 6-rule report).
-    # Pinned at r11; CORRECTNESS_r11.json recorded the fresh green row, so
-    # this entry is now inert and kept only as the pin-history record.
-    ("quality_constraint_report", 11),
-    # elbow_cut's r11 corrupt-vector exclusion was NOT pinned: like the
-    # round's ~50 other oracle edits, its CLEAN-data output is unchanged
-    # (bit-identical at sf0.001/0.01), so the r10 green row still
-    # attests driver-data behavior.
-]
-
-# Round 6 deferred its 39 trivial-semantics additions behind the stale-refresh
-# cohort (pinned last_green=2) because 60 new queries exceeded the window.
-# Round 7 retires the pin: the whole never-driver-checked backlog (those 39,
-# minus the four force-fronted above) now sorts first via last_green == 0,
-# clearing the backlog in one window per VERDICT r6 item 2. Keep the mechanism
-# for future rounds that again add more queries than the window holds.
-_DEFER_NEW: frozenset[str] = frozenset()
+# The driver verifies the FIRST 50 registered queries per round, so the
+# registry's order controls which queries accumulate CORRECTNESS rows.
+# Rotation policy, computed from the CORRECTNESS_r*.json records the driver
+# leaves in the repo root: queries whose last driver-green row is oldest go
+# first (never-green and brand-new queries lead), so every query re-accumulates
+# a fresh row every few rounds instead of staying green-by-assumption. Ties in
+# staleness break by query name, so the order depends only on the names and
+# the driver records, never on which module registers first.
 
 
 def _last_green_rounds() -> dict[str, int]:
@@ -221,44 +140,18 @@ def _last_green_rounds() -> dict[str, int]:
     return last
 
 
-def _active_pins(last_green: dict[str, int] | None = None) -> list[str]:
-    """Names of _FORCE_FRONT pins still in force, in list order.
-
-    A pin is ACTIVE only while its query has no driver-green row from a
-    round at or after the pin round; afterwards it self-releases (stays in
-    the list as history, ignored here) so the rotation returns to pure
-    staleness order without a manual next-round edit.
-    """
-    if last_green is None:
-        last_green = _last_green_rounds()
-    return [n for n, pin_round in _FORCE_FRONT if last_green.get(n, 0) < pin_round]
-
-
 def _prioritize(reg: Registry) -> None:
-    missing = {n for n, _ in _FORCE_FRONT} - set(reg.queries)
-    if missing:  # a typo here would silently drop a query from the rotation
-        raise ValueError(f"front-list names not in registry: {sorted(missing)}")
     last_green = _last_green_rounds()
-    reg_index = {n: i for i, n in enumerate(reg.queries)}
-    forced = {n: i for i, n in enumerate(_active_pins(last_green))}
 
     def key(name: str):
-        # forced-front first (list order), then oracle-backed queries by
-        # ascending last-green round (0 = never green / new this round), ties
-        # by registration order. Queries WITHOUT an oracle sort last: the
-        # driver can only ever record err=no_oracle for them, so they can
-        # never earn a green row and would otherwise pin themselves to the
-        # front forever, burning a verification slot every round (their
-        # correctness evidence lives in tests/, not CORRECTNESS_r*.json).
-        green = last_green.get(name, 0)
-        if name in _DEFER_NEW:
-            green = max(green, 2)
-        return (
-            0 if name in forced else (1 if name in reg.oracles else 2),
-            forced.get(name, 0),
-            green,
-            reg_index[name],
-        )
+        # oracle-backed queries by ascending last-green round (0 = never green
+        # / new this round), ties by name. Queries WITHOUT an oracle sort
+        # last: the driver can only ever record err=no_oracle for them, so
+        # they can never earn a green row and would otherwise pin themselves
+        # to the front forever, burning a verification slot every round
+        # (their correctness evidence lives in tests/, not
+        # CORRECTNESS_r*.json).
+        return (name not in reg.oracles, last_green.get(name, 0), name)
 
     order = sorted(reg.queries, key=key)
     reg.queries = {n: reg.queries[n] for n in order}

@@ -346,74 +346,6 @@ def register(reg):
         f"{filled_case} AS qty_filled "
         "FROM lineitem GROUP BY l_returnflag",
     )
-
-
-def mode_per_group(spark, sf_dir):
-    """Deterministic per-group mode: most frequent c_nationkey per market
-    segment, ties broken by smallest key. Built-in `F.mode` is
-    tie-nondeterministic, so the operator is expressed as the two-level
-    plan a 100 TB engine wants anyway: keyed count (map-side partial agg
-    collapses the fact table) then a per-group argmax via max_by over a
-    (count, -key) struct — no window sort over the full count table."""
-    c = load(spark, sf_dir, "customer")
-    counts = c.groupBy("c_mktsegment", "c_nationkey").agg(F.count("*").alias("cnt"))
-    return counts.groupBy("c_mktsegment").agg(
-        F.max_by(
-            F.struct(F.col("c_nationkey").alias("k"), F.col("cnt").alias("c")),
-            F.struct(F.col("cnt"), -F.col("c_nationkey")),
-        ).alias("m")
-    ).select(
-        "c_mktsegment",
-        F.col("m.k").alias("mode_nationkey"),
-        F.col("m.c").alias("mode_count"),
-    )
-
-
-HIST_WIDTH = 25.0  # events.value spans ~0..500; 20 fixed-width buckets
-HIST_BUCKETS = 20
-
-
-def value_histogram(spark, sf_dir):
-    """Fixed-width numeric histogram over events.value — the profiling
-    primitive behind range-partition planning and outlier triage. Bucket
-    index is pure map-side arithmetic (floor(value/width), clamped to the
-    top bucket), so the plan is scan → partial agg → 20-row final agg;
-    at 100 TB nothing but 20-row partials ever shuffles."""
-    from ._util import finite
-
-    # finite values only: NaN would otherwise ride Spark's NaN-is-greatest
-    # ordering through least() into the top bucket (and crash DuckDB's
-    # int cast) — a histogram bucket for NaN is meaningless
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & finite(F.col("value"))
-    )
-    # clamp BOTH ends: without the greatest(), a negative value lands in a
-    # negative bucket; least() alone also skips NULLs (returning 19), so
-    # NULL rows are dropped explicitly above rather than miscounted
-    bucket = F.least(
-        F.greatest(F.floor(F.col("value") / HIST_WIDTH), F.lit(0)),
-        F.lit(HIST_BUCKETS - 1),
-    ).cast("int")
-    return (
-        ev.select(bucket.alias("bucket"), "value")
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias("bucket_value"),
-        )
-        .select(
-            "bucket",
-            (F.col("bucket") * HIST_WIDTH).alias("lo"),
-            ((F.col("bucket") + 1) * HIST_WIDTH).alias("hi"),
-            "n",
-            "bucket_value",
-        )
-    )
-
-
-def register_round6(reg):
-    """Round-6 aggregate additions: deterministic mode, fixed-width
-    histogram."""
     reg.add(
         "agg_mode_per_group",
         mode_per_group,
@@ -489,6 +421,91 @@ def register_round6(reg):
         + corr_sql("y", "z")
         + " AS corr_price_disc FROM g",
     )
+    reg.add(
+        "agg_bool_counters",
+        bool_counters,
+        "SELECT l_returnflag, "
+        "CAST(count_if(l_quantity >= 25) AS BIGINT) AS n_big, "
+        # explicit NaN arm: DuckDB 1.0's parquet scan path evaluates a
+        # pushed-down NaN comparison inconsistently (bool_and saw zero
+        # FALSE rows while COUNT FILTER over the same predicate saw the
+        # NaN rows as not-true); Spark's total order has NaN <= x FALSE
+        "bool_and(CASE WHEN isnan(l_discount) THEN FALSE "
+        "ELSE l_discount <= 0.1 END) AS all_small_disc, "
+        "bool_or(l_tax > 0.07) AS any_high_tax, "
+        "CAST(count_if(l_extendedprice > 30000.0) AS BIGINT) AS n_pricey "
+        "FROM lineitem GROUP BY l_returnflag",
+    )
+    reg.add("reshape_unpivot", unpivot_metrics, _UNPIVOT_SQL)
+    reg.add("feature_quantile_bin", quantile_bin, _QBIN_SQL)
+    reg.add("stats_chi_square", chi_square_independence, _CHI2_SQL)
+    reg.add("mine_frequent_pairs", frequent_pairs, _PAIRS_SQL)
+    reg.add("stats_linreg", linreg_by_group, _LINREG_SQL)
+    reg.add("stats_mutual_information", mutual_information, _MI_SQL)
+    reg.add("trend_weekly_growth", trend_weekly_growth, _TREND_SQL)
+
+
+def mode_per_group(spark, sf_dir):
+    """Deterministic per-group mode: most frequent c_nationkey per market
+    segment, ties broken by smallest key. Built-in `F.mode` is
+    tie-nondeterministic, so the operator is expressed as the two-level
+    plan a 100 TB engine wants anyway: keyed count (map-side partial agg
+    collapses the fact table) then a per-group argmax via max_by over a
+    (count, -key) struct — no window sort over the full count table."""
+    c = load(spark, sf_dir, "customer")
+    counts = c.groupBy("c_mktsegment", "c_nationkey").agg(F.count("*").alias("cnt"))
+    return counts.groupBy("c_mktsegment").agg(
+        F.max_by(
+            F.struct(F.col("c_nationkey").alias("k"), F.col("cnt").alias("c")),
+            F.struct(F.col("cnt"), -F.col("c_nationkey")),
+        ).alias("m")
+    ).select(
+        "c_mktsegment",
+        F.col("m.k").alias("mode_nationkey"),
+        F.col("m.c").alias("mode_count"),
+    )
+
+
+HIST_WIDTH = 25.0  # events.value spans ~0..500; 20 fixed-width buckets
+HIST_BUCKETS = 20
+
+
+def value_histogram(spark, sf_dir):
+    """Fixed-width numeric histogram over events.value — the profiling
+    primitive behind range-partition planning and outlier triage. Bucket
+    index is pure map-side arithmetic (floor(value/width), clamped to the
+    top bucket), so the plan is scan → partial agg → 20-row final agg;
+    at 100 TB nothing but 20-row partials ever shuffles."""
+    from ._util import finite
+
+    # finite values only: NaN would otherwise ride Spark's NaN-is-greatest
+    # ordering through least() into the top bucket (and crash DuckDB's
+    # int cast) — a histogram bucket for NaN is meaningless
+    ev = load(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull() & finite(F.col("value"))
+    )
+    # clamp BOTH ends: without the greatest(), a negative value lands in a
+    # negative bucket; least() alone also skips NULLs (returning 19), so
+    # NULL rows are dropped explicitly above rather than miscounted
+    bucket = F.least(
+        F.greatest(F.floor(F.col("value") / HIST_WIDTH), F.lit(0)),
+        F.lit(HIST_BUCKETS - 1),
+    ).cast("int")
+    return (
+        ev.select(bucket.alias("bucket"), "value")
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias("bucket_value"),
+        )
+        .select(
+            "bucket",
+            (F.col("bucket") * HIST_WIDTH).alias("lo"),
+            ((F.col("bucket") + 1) * HIST_WIDTH).alias("hi"),
+            "n",
+            "bucket_value",
+        )
+    )
 
 
 def corr_pairs(spark, sf_dir):
@@ -543,25 +560,6 @@ def bool_counters(spark, sf_dir):
         F.bool_and(F.col("l_discount") <= 0.1).alias("all_small_disc"),
         F.bool_or(F.col("l_tax") > 0.07).alias("any_high_tax"),
         F.count_if(F.col("l_extendedprice") > 30000.0).alias("n_pricey"),
-    )
-
-
-def register_round6b(reg):
-    """Round-6 predicate-aggregate family."""
-    reg.add(
-        "agg_bool_counters",
-        bool_counters,
-        "SELECT l_returnflag, "
-        "CAST(count_if(l_quantity >= 25) AS BIGINT) AS n_big, "
-        # explicit NaN arm: DuckDB 1.0's parquet scan path evaluates a
-        # pushed-down NaN comparison inconsistently (bool_and saw zero
-        # FALSE rows while COUNT FILTER over the same predicate saw the
-        # NaN rows as not-true); Spark's total order has NaN <= x FALSE
-        "bool_and(CASE WHEN isnan(l_discount) THEN FALSE "
-        "ELSE l_discount <= 0.1 END) AS all_small_disc, "
-        "bool_or(l_tax > 0.07) AS any_high_tax, "
-        "CAST(count_if(l_extendedprice > 30000.0) AS BIGINT) AS n_pricey "
-        "FROM lineitem GROUP BY l_returnflag",
     )
 
 
@@ -648,11 +646,6 @@ SELECT l.l_returnflag,
 FROM lineitem l JOIN fences USING (l_returnflag)
 GROUP BY 1, 2
 """
-
-
-def register_round6c(reg):
-    reg.add("reshape_unpivot", unpivot_metrics, _UNPIVOT_SQL)
-    reg.add("feature_quantile_bin", quantile_bin, _QBIN_SQL)
 
 
 def chi_square_independence(spark, sf_dir):
@@ -761,11 +754,6 @@ GROUP BY 1, 2 HAVING COUNT(*) >= {_PAIR_MINSUP}
 """
 
 
-def register_round6d(reg):
-    reg.add("stats_chi_square", chi_square_independence, _CHI2_SQL)
-    reg.add("mine_frequent_pairs", frequent_pairs, _PAIRS_SQL)
-
-
 def linreg_by_group(spark, sf_dir):
     """Per-group OLS regression (slope/intercept/r² of extendedprice on
     quantity) from closed-form moment sums — Σx, Σy, Σxy, Σx², Σy² each
@@ -821,10 +809,6 @@ SELECT l_returnflag, n AS n_points,
          / ((n * sxx - sx * sx) * (n * syy - sy * sy)) AS r2
 FROM m
 """
-
-
-def register_round6e(reg):
-    reg.add("stats_linreg", linreg_by_group, _LINREG_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -936,10 +920,6 @@ FROM mi, ha, hb
 """
 
 
-def register_round7(reg):
-    reg.add("stats_mutual_information", mutual_information, _MI_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Calendar-trend analytics: weekly revenue growth
 
@@ -1015,7 +995,3 @@ SELECT week, CAST(rev_dec AS DOUBLE) AS revenue, n_orders,
 FROM keyed
 WINDOW w AS (ORDER BY _wk_nn, _wk)
 """
-
-
-def register_round7b(reg):
-    reg.add("trend_weekly_growth", trend_weekly_growth, _TREND_SQL)

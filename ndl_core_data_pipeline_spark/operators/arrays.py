@@ -138,6 +138,8 @@ def register(reg):
         "SELECT o_custkey, COALESCE(MIN(o_orderdate), TIMESTAMP '1970-01-01') AS oldest, "
         "COUNT(o_orderdate) AS n_changes FROM orders GROUP BY o_custkey",
     )
+    reg.add("array_hof_family", hof_family, _HOF_SQL)
+    reg.add("func_map_family", map_family, _map_sql())
 
 
 def hof_family(spark, sf_dir):
@@ -178,10 +180,6 @@ SELECT doc_id,
                       AS BIGINT) END AS n_chars
 FROM ws
 """
-
-
-def register_round6(reg):
-    reg.add("array_hof_family", hof_family, _HOF_SQL)
 
 
 def map_family(spark, sf_dir):
@@ -240,7 +238,3 @@ SELECT event_id,
                     concat_ws('=', 'type', event_type)]), ',') AS entries_sorted
 FROM j
 """
-
-
-def register_round6b(reg):
-    reg.add("func_map_family", map_family, _map_sql())

@@ -450,8 +450,7 @@ def simhash_near_dup_pairs(spark, sf_dir):
     )
 
 
-# ---- oracle SQL fragments shared by the minhash family (module-level so
-# ---- register() and register_round2() compose the same text).
+# ---- oracle SQL fragments shared by the minhash family.
 # range(0, len-n+1) is empty for len < n, mirroring the size(words) >=
 # SHINGLE_N guard in _shingles_spark — both engines emit zero shingles
 # for docs shorter than the n-gram
@@ -814,14 +813,9 @@ JOIN bsize s ON s.band = a.band AND s.nibble = a.nibble
 WHERE s.m <= {MAX_BUCKET_MEMBERS}
   AND bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}""",
     )
-
-
-def register_round2(reg):
-    """Round-2 additions — registered after every round-1 query (see
-    contract.build_registry ordering note). The cluster oracle computes
-    the same transitive closure as the Spark loop with a recursive CTE:
-    reach(node, lbl) enumerates every label reachable from each node,
-    MIN(lbl) per node is the component id."""
+    # the cluster oracle computes the same transitive closure as the Spark
+    # loop with a recursive CTE: reach(node, lbl) enumerates every label
+    # reachable from each node, MIN(lbl) per node is the component id
     reg.add(
         "dedup_minhash_clusters",
         minhash_clusters,
@@ -851,6 +845,56 @@ reach(node, lbl) AS (
 )
 SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node""",
     )
+    reg.add(
+        "dedup_substring_spans",
+        substring_dup_spans,
+        rf"""WITH pos AS (
+  SELECT doc_id, i AS start,
+         md5(array_to_string(ws[i + 1 : i + {SPAN_W}], ' ')) AS gh
+  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+        FROM documents) d,
+       UNNEST(range(0, len(ws) - {SPAN_W} + 1)) AS t(i)
+  WHERE len(ws) >= {SPAN_W}
+),
+dup AS (SELECT gh FROM pos GROUP BY gh HAVING COUNT(*) > 1),
+hits AS (
+  SELECT doc_id, start, start + {SPAN_W} - 1 AS "end"
+  FROM pos WHERE gh IN (SELECT gh FROM dup)
+),
+flagged AS (
+  SELECT doc_id, start, "end",
+         CASE WHEN MAX("end") OVER w IS NULL
+              OR start > MAX("end") OVER w THEN 1 ELSE 0 END AS is_new
+  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY start
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+),
+spans AS (
+  SELECT doc_id, start, "end",
+         SUM(is_new) OVER (PARTITION BY doc_id ORDER BY start
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS span_id
+  FROM flagged
+)
+SELECT doc_id, CAST(span_id AS BIGINT) AS span_id,
+       MIN(start) AS span_start, MAX("end") AS span_end,
+       COUNT(*) AS n_dup_grams
+FROM spans GROUP BY doc_id, span_id""",
+    )
+    reg.add(
+        "dedup_incremental_vs_base",
+        incremental_dedup_vs_base,
+        rf"""WITH fp AS (
+  SELECT doc_id,
+         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+  FROM documents
+),
+base AS (SELECT DISTINCT fp FROM fp WHERE doc_id < {INCREMENTAL_BASE_MAX}),
+incoming AS (SELECT * FROM fp WHERE doc_id >= {INCREMENTAL_BASE_MAX})
+SELECT doc_id, CASE WHEN fp IN (SELECT fp FROM base)
+                    THEN 'duplicate_of_base' ELSE 'new' END AS verdict
+FROM incoming"""
+    )
+    reg.add("dedup_jaccard_prefix_join", jaccard_prefix_join, _JACC_SQL)
 
 
 # --------------------------------------------- exact-substring span dedup
@@ -932,59 +976,6 @@ def substring_dup_spans(spark, sf_dir):
         F.min("start").alias("span_start"),
         F.max("end").alias("span_end"),
         F.count("*").alias("n_dup_grams"),
-    )
-
-
-def register_round6(reg):
-    """Round-6 dedup addition: exact-substring duplicate spans."""
-    reg.add(
-        "dedup_substring_spans",
-        substring_dup_spans,
-        rf"""WITH pos AS (
-  SELECT doc_id, i AS start,
-         md5(array_to_string(ws[i + 1 : i + {SPAN_W}], ' ')) AS gh
-  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
-        FROM documents) d,
-       UNNEST(range(0, len(ws) - {SPAN_W} + 1)) AS t(i)
-  WHERE len(ws) >= {SPAN_W}
-),
-dup AS (SELECT gh FROM pos GROUP BY gh HAVING COUNT(*) > 1),
-hits AS (
-  SELECT doc_id, start, start + {SPAN_W} - 1 AS "end"
-  FROM pos WHERE gh IN (SELECT gh FROM dup)
-),
-flagged AS (
-  SELECT doc_id, start, "end",
-         CASE WHEN MAX("end") OVER w IS NULL
-              OR start > MAX("end") OVER w THEN 1 ELSE 0 END AS is_new
-  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY start
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-spans AS (
-  SELECT doc_id, start, "end",
-         SUM(is_new) OVER (PARTITION BY doc_id ORDER BY start
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS span_id
-  FROM flagged
-)
-SELECT doc_id, CAST(span_id AS BIGINT) AS span_id,
-       MIN(start) AS span_start, MAX("end") AS span_end,
-       COUNT(*) AS n_dup_grams
-FROM spans GROUP BY doc_id, span_id""",
-    )
-    reg.add(
-        "dedup_incremental_vs_base",
-        incremental_dedup_vs_base,
-        rf"""WITH fp AS (
-  SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-  FROM documents
-),
-base AS (SELECT DISTINCT fp FROM fp WHERE doc_id < {INCREMENTAL_BASE_MAX}),
-incoming AS (SELECT * FROM fp WHERE doc_id >= {INCREMENTAL_BASE_MAX})
-SELECT doc_id, CASE WHEN fp IN (SELECT fp FROM base)
-                    THEN 'duplicate_of_base' ELSE 'new' END AS verdict
-FROM incoming"""
     )
 
 
@@ -1162,7 +1153,3 @@ SELECT name_a, name_b,
          AS jaccard
 FROM pairs WHERE inter * {JACC_TAU_DEN} >= uni * {JACC_TAU_NUM}
 """
-
-
-def register_round7(reg):
-    reg.add("dedup_jaccard_prefix_join", jaccard_prefix_join, _JACC_SQL)

@@ -123,6 +123,56 @@ def register(reg):
         watermark_dedup_projection,
         "SELECT DISTINCT user_id, event_type FROM events",
     )
+    reg.add(
+        "events_funnel_steps",
+        funnel_steps,
+        "WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events "
+        "WHERE event_type = 'view' GROUP BY user_id), "
+        "c AS (SELECT e.user_id, MIN(e.ts) AS click_ts FROM events e "
+        "JOIN v ON e.user_id = v.user_id AND e.ts > v.view_ts "
+        "WHERE e.event_type = 'click' GROUP BY e.user_id), "
+        "p AS (SELECT e.user_id, MIN(e.ts) AS purchase_ts FROM events e "
+        "JOIN c ON e.user_id = c.user_id AND e.ts > c.click_ts "
+        "WHERE e.event_type = 'purchase' GROUP BY e.user_id) "
+        "SELECT v.user_id, view_ts, click_ts, purchase_ts, "
+        "1 + CAST(click_ts IS NOT NULL AS INT) "
+        "+ CAST(purchase_ts IS NOT NULL AS INT) AS funnel_stage "
+        "FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)",
+    )
+    reg.add(
+        "events_cohort_retention",
+        cohort_retention,
+        "WITH f AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day "
+        "FROM events GROUP BY user_id) "
+        "SELECT cohort_day, "
+        "datediff('day', cohort_day, CAST(ts AS DATE)) AS day_offset, "
+        "COUNT(DISTINCT e.user_id) AS n_users "
+        "FROM events e JOIN f USING (user_id) "
+        "GROUP BY cohort_day, day_offset",
+    )
+    reg.add(
+        "events_pattern_match",
+        sequence_pattern_match,
+        # ORDER BY carries the aggregated char itself as the final
+        # tiebreak: the engine side sorts (ts, event_id, c) STRUCTS, so
+        # rows tying on both keys (dirty data: both NULL, ~9% at 30%
+        # NULL density) order by c there — without the same tiebreak
+        # here the oracle's tie order is arrival-dependent and the
+        # strict-funnel count diverges (NULLHEAVY_r15; rows tying on all
+        # three contribute identical chars, so order among them is moot)
+        "WITH seqs AS (SELECT user_id, "
+        "string_agg(substr(event_type, 1, 1), '' "
+        "ORDER BY ts, event_id, substr(event_type, 1, 1)) AS seq "
+        "FROM events GROUP BY user_id) "
+        "SELECT user_id, CAST(LENGTH(seq) AS BIGINT) AS n_events, "
+        "CAST((LENGTH(seq) - LENGTH(REPLACE(seq, 'vcp', ''))) / 3 AS BIGINT) "
+        "AS n_strict_funnels FROM seqs",
+    )
+    reg.add("events_session_paths", session_paths, _PATHS_SQL)
+    reg.add("events_rfm_scores", rfm_scores, _RFM_SQL)
+    reg.add("events_debounce", events_debounce, _DEBOUNCE_SQL)
+    reg.add("events_markov_transitions", events_markov_transitions, _MARKOV_SQL)
+    reg.add("window_cusum_drift", window_cusum_drift, _CUSUM_SQL)
 
 
 def funnel_steps(spark, sf_dir):
@@ -215,56 +265,6 @@ def cohort_retention(spark, sf_dir):
         )
         .groupBy("cohort_day", "day_offset")
         .agg(F.countDistinct("user_id").alias("n_users"))
-    )
-
-
-def register_round6(reg):
-    """Round-6 event-analytics additions: conversion funnel, cohort
-    retention."""
-    reg.add(
-        "events_funnel_steps",
-        funnel_steps,
-        "WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events "
-        "WHERE event_type = 'view' GROUP BY user_id), "
-        "c AS (SELECT e.user_id, MIN(e.ts) AS click_ts FROM events e "
-        "JOIN v ON e.user_id = v.user_id AND e.ts > v.view_ts "
-        "WHERE e.event_type = 'click' GROUP BY e.user_id), "
-        "p AS (SELECT e.user_id, MIN(e.ts) AS purchase_ts FROM events e "
-        "JOIN c ON e.user_id = c.user_id AND e.ts > c.click_ts "
-        "WHERE e.event_type = 'purchase' GROUP BY e.user_id) "
-        "SELECT v.user_id, view_ts, click_ts, purchase_ts, "
-        "1 + CAST(click_ts IS NOT NULL AS INT) "
-        "+ CAST(purchase_ts IS NOT NULL AS INT) AS funnel_stage "
-        "FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)",
-    )
-    reg.add(
-        "events_cohort_retention",
-        cohort_retention,
-        "WITH f AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day "
-        "FROM events GROUP BY user_id) "
-        "SELECT cohort_day, "
-        "datediff('day', cohort_day, CAST(ts AS DATE)) AS day_offset, "
-        "COUNT(DISTINCT e.user_id) AS n_users "
-        "FROM events e JOIN f USING (user_id) "
-        "GROUP BY cohort_day, day_offset",
-    )
-    reg.add(
-        "events_pattern_match",
-        sequence_pattern_match,
-        # ORDER BY carries the aggregated char itself as the final
-        # tiebreak: the engine side sorts (ts, event_id, c) STRUCTS, so
-        # rows tying on both keys (dirty data: both NULL, ~9% at 30%
-        # NULL density) order by c there — without the same tiebreak
-        # here the oracle's tie order is arrival-dependent and the
-        # strict-funnel count diverges (NULLHEAVY_r15; rows tying on all
-        # three contribute identical chars, so order among them is moot)
-        "WITH seqs AS (SELECT user_id, "
-        "string_agg(substr(event_type, 1, 1), '' "
-        "ORDER BY ts, event_id, substr(event_type, 1, 1)) AS seq "
-        "FROM events GROUP BY user_id) "
-        "SELECT user_id, CAST(LENGTH(seq) AS BIGINT) AS n_events, "
-        "CAST((LENGTH(seq) - LENGTH(REPLACE(seq, 'vcp', ''))) / 3 AS BIGINT) "
-        "AS n_strict_funnels FROM seqs",
     )
 
 
@@ -389,10 +389,6 @@ WITH b AS (
 SELECT trigram, COUNT(*) AS cnt FROM tris GROUP BY trigram
 ORDER BY cnt DESC, trigram LIMIT {PATH_TOPK}
 """
-
-
-def register_round6b(reg):
-    reg.add("events_session_paths", session_paths, _PATHS_SQL)
 
 
 def _ntile5_expr(rank: str, n: str):
@@ -533,10 +529,6 @@ FROM s
 """
 
 
-def register_round6c(reg):
-    reg.add("events_rfm_scores", rfm_scores, _RFM_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Burst debouncing
 
@@ -613,10 +605,6 @@ SELECT user_id, event_type, CAST(burst_id AS BIGINT) AS burst_id,
          AS burst_value
 FROM numbered GROUP BY user_id, event_type, burst_id
 """
-
-
-def register_round7(reg):
-    reg.add("events_debounce", events_debounce, _DEBOUNCE_SQL)
 
 
 def events_markov_transitions(spark, sf_dir):
@@ -750,8 +738,3 @@ SELECT s.event_type, COUNT(*) AS n,
 FROM s JOIN m USING (event_type)
 GROUP BY s.event_type
 """
-
-
-def register_round7b(reg):
-    reg.add("events_markov_transitions", events_markov_transitions, _MARKOV_SQL)
-    reg.add("window_cusum_drift", window_cusum_drift, _CUSUM_SQL)

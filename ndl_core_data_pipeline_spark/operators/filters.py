@@ -127,6 +127,19 @@ def register(reg):
         "SELECT doc_id, TRIM(lang) AS lang_clean FROM documents "
         "WHERE TRIM(lang) NOT IN ('NA','N/A','NULL','null','na','n/a','None','NONE','-','')",
     )
+    reg.add(
+        "filter_iqr_outliers",
+        iqr_outlier_filter,
+        f"WITH o AS (SELECT * FROM orders WHERE isfinite(o_totalprice)), "
+        f"b AS (SELECT quantile_cont(o_totalprice, 0.25) AS q1, "
+        f"quantile_cont(o_totalprice, 0.75) AS q3 FROM o), "
+        f"f AS (SELECT q1 - {IQR_MULT} * (q3 - q1) AS lo, "
+        f"q3 + {IQR_MULT} * (q3 - q1) AS hi FROM b) "
+        "SELECT o_orderkey, o_totalprice, "
+        "CASE WHEN o_totalprice < lo THEN 'low' ELSE 'high' END AS tail "
+        "FROM o, f WHERE o_totalprice < lo OR o_totalprice > hi",
+    )
+    reg.add("filter_mad_outliers", mad_outliers, _MAD_SQL)
 
 
 IQR_MULT = 0.25  # synthetic orders are near-uniform — 1.5×IQR (the Tukey
@@ -162,22 +175,6 @@ def iqr_outlier_filter(spark, sf_dir):
             .otherwise("high")
             .alias("tail"),
         )
-    )
-
-
-def register_round6(reg):
-    """Round-6 filter addition: quantile-fence outliers."""
-    reg.add(
-        "filter_iqr_outliers",
-        iqr_outlier_filter,
-        f"WITH o AS (SELECT * FROM orders WHERE isfinite(o_totalprice)), "
-        f"b AS (SELECT quantile_cont(o_totalprice, 0.25) AS q1, "
-        f"quantile_cont(o_totalprice, 0.75) AS q3 FROM o), "
-        f"f AS (SELECT q1 - {IQR_MULT} * (q3 - q1) AS lo, "
-        f"q3 + {IQR_MULT} * (q3 - q1) AS hi FROM b) "
-        "SELECT o_orderkey, o_totalprice, "
-        "CASE WHEN o_totalprice < lo THEN 'low' ELSE 'high' END AS tail "
-        "FROM o, f WHERE o_totalprice < lo OR o_totalprice > hi",
     )
 
 
@@ -259,7 +256,3 @@ def mad_outliers_approx(spark, sf_dir):
         .filter(F.col("adev") > 3 * F.col("mad"))
         .select("event_id", "event_type", "value", "med", "mad")
     )
-
-
-def register_round6b(reg):
-    reg.add("filter_mad_outliers", mad_outliers, _MAD_SQL)

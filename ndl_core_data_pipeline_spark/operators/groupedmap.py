@@ -64,6 +64,20 @@ def register(reg):
         "ELSE 0.0 END, 6) AS zscore "
         "FROM documents WINDOW w AS (PARTITION BY source)",
     )
+    reg.add(
+        "udtf_word_chunks",
+        udtf_word_chunks,
+        rf"""WITH t AS (
+  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
+                             w -> len(w) > 0) AS ws
+  FROM documents WHERE trim(text) <> ''
+)
+SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
+       array_to_string(ws[i * {UDTF_CHUNK_WORDS} + 1 :
+                          (i + 1) * {UDTF_CHUNK_WORDS}], ' ') AS chunk_text
+FROM t, UNNEST(range(0, CAST(ceil(len(ws) / {UDTF_CHUNK_WORDS}.0) AS BIGINT)))
+     AS u(i)""",
+    )
 
 
 UDTF_CHUNK_WORDS = 40  # words per emitted chunk
@@ -96,22 +110,4 @@ def udtf_word_chunks(spark, sf_dir):
         "SELECT doc_id, c.chunk_idx, c.chunk_text "
         "FROM docs_udtf_v, LATERAL word_chunks(text) AS c "
         "WHERE trim(text) <> ''"
-    )
-
-
-def register_round6(reg):
-    """Round-6 §2.13 addition: Python UDTF chunker."""
-    reg.add(
-        "udtf_word_chunks",
-        udtf_word_chunks,
-        rf"""WITH t AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                             w -> len(w) > 0) AS ws
-  FROM documents WHERE trim(text) <> ''
-)
-SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-       array_to_string(ws[i * {UDTF_CHUNK_WORDS} + 1 :
-                          (i + 1) * {UDTF_CHUNK_WORDS}], ' ') AS chunk_text
-FROM t, UNNEST(range(0, CAST(ceil(len(ws) / {UDTF_CHUNK_WORDS}.0) AS BIGINT)))
-     AS u(i)""",
     )

@@ -463,12 +463,6 @@ def register(reg):
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
         ") t WHERE event_type = 'purchase'",
     )
-
-
-def register_round6(reg):
-    """Round-6 join-family additions: the three shuffle-strategy shapes a
-    100 TB deployment leans on (binned range join, salt-split skew join,
-    full-outer MERGE)."""
     reg.add(
         "join_range_binned",
         range_join_binned,
@@ -527,6 +521,7 @@ def register_round6(reg):
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
         ") t WHERE event_type = 'purchase'",
     )
+    reg.add("join_interval_overlap", interval_overlap_join, _OVERLAP_SQL)
 
 
 ASOF_TOLERANCE_US = 1800 * 1_000_000  # 30-minute match window
@@ -666,7 +661,3 @@ SELECT DISTINCT l_orderkey, l_linenumber, o_orderkey,
        CAST(LEAST(a_e, b_e) - GREATEST(a_s, b_s) + 1 AS BIGINT) AS overlap_days
 FROM a JOIN b ON a_s <= b_e AND b_s <= a_e
 """
-
-
-def register_round7(reg):
-    reg.add("join_interval_overlap", interval_overlap_join, _OVERLAP_SQL)

@@ -142,6 +142,13 @@ def register(reg):
         "CAST(lang = 'en' AS INT) AS was_masked "
         f"FROM ({_sql_with_pii()}) t",
     )
+    reg.add(
+        "pii_k_anonymity",
+        k_anonymity_report,
+        f"SELECT c_nationkey, c_mktsegment, COUNT(*) AS group_size, "
+        f"COUNT(*) < {K_ANON} AS at_risk "
+        "FROM customer GROUP BY c_nationkey, c_mktsegment",
+    )
 
 
 K_ANON = 5  # minimum group size for quasi-identifier combinations
@@ -164,15 +171,4 @@ def k_anonymity_report(spark, sf_dir):
             "group_size",
             (F.col("group_size") < K_ANON).alias("at_risk"),
         )
-    )
-
-
-def register_round6(reg):
-    """Round-6 privacy addition: k-anonymity audit."""
-    reg.add(
-        "pii_k_anonymity",
-        k_anonymity_report,
-        f"SELECT c_nationkey, c_mktsegment, COUNT(*) AS group_size, "
-        f"COUNT(*) < {K_ANON} AS at_risk "
-        "FROM customer GROUP BY c_nationkey, c_mktsegment",
     )

@@ -67,6 +67,18 @@ def register(reg):
         distinct_rows,
         "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
     )
+    reg.add(
+        "setop_except_all",
+        except_all_keys,
+        "SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'F' "
+        "EXCEPT ALL SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'O'",
+    )
+    reg.add(
+        "setop_intersect_all",
+        intersect_all_keys,
+        "SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'F' "
+        "INTERSECT ALL SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'O'",
+    )
 
 
 def except_all_keys(spark, sf_dir):
@@ -94,19 +106,3 @@ def intersect_all_keys(spark, sf_dir):
         F.col("o_custkey").alias("key")
     )
     return f_cust.intersectAll(o_cust)
-
-
-def register_round6(reg):
-    """Round-6 set-op completions: bag (ALL) variants."""
-    reg.add(
-        "setop_except_all",
-        except_all_keys,
-        "SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'F' "
-        "EXCEPT ALL SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'O'",
-    )
-    reg.add(
-        "setop_intersect_all",
-        intersect_all_keys,
-        "SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'F' "
-        "INTERSECT ALL SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'O'",
-    )

@@ -207,6 +207,7 @@ SELECT vec_id, dist, rnk FROM (
 ) t WHERE cut_seen = 0
 """,
     )
+    reg.add("sort_pareto_front", pareto_front, _PARETO_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -297,7 +298,3 @@ SELECT o_orderkey, o_orderdate, o_totalprice FROM f
 WHERE NOT (COALESCE(mp_prev <= o_totalprice, FALSE)
            OR COALESCE(mp_same < o_totalprice, FALSE))
 """
-
-
-def register_round7(reg):
-    reg.add("sort_pareto_front", pareto_front, _PARETO_SQL)

@@ -483,111 +483,6 @@ def gopher_filters(spark, sf_dir):
     )
 
 
-def register_round2(reg):
-    """Round-2 additions — registered after every round-1 query (see
-    contract.build_registry ordering note)."""
-    reg.add(
-        "text_winnowing_fingerprints",
-        winnowing_fingerprints,
-        r"""WITH sh AS (
-  SELECT doc_id, i AS pos,
-         words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] AS shingle
-  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words
-        FROM documents WHERE doc_id IS NOT NULL) w,
-       UNNEST(range(0, len(words) - 2)) AS t(i)
-  WHERE len(words) >= 3
-),
-hashed AS (
-  SELECT doc_id, pos,
-         CAST('0x' || substring(md5(shingle), 1, 12) AS BIGINT) AS h
-  FROM sh
-),
-wins AS (
-  SELECT doc_id,
-         MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND %d FOLLOWING) AS fp
-  FROM hashed
-)
-SELECT DISTINCT doc_id, fp FROM wins""" % (WINNOW_W - 1),
-    )
-    reg.add(
-        "text_repetition_signals",
-        repetition_signals,
-        r"""WITH words AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS w
-    FROM documents) t
-  WHERE LENGTH(w) > 0
-),
-wc AS (SELECT doc_id, w, COUNT(*) AS cnt FROM words GROUP BY doc_id, w),
-ws AS (
-  SELECT doc_id,
-         CAST(SUM(cnt) AS BIGINT) AS n_words,
-         CAST(COUNT(*) AS BIGINT) AS n_uniq,
-         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_occ
-  FROM wc GROUP BY doc_id),
-topw AS (
-  SELECT doc_id, cnt, w,
-         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, w DESC) AS rn
-  FROM wc),
-bg AS (
-  SELECT doc_id, LENGTH(text) AS n_chars, ws[i + 1] || ' ' || ws[i + 2] AS bg
-  FROM (SELECT doc_id, text,
-               string_split_regex(lower(trim(text)), '\s+') AS ws
-        FROM documents) t,
-       UNNEST(range(0, len(ws) - 1)) AS u(i)
-  WHERE len(ws) >= 2),
-bgc AS (SELECT doc_id, n_chars, bg, COUNT(*) AS cnt
-        FROM bg GROUP BY doc_id, n_chars, bg),
-bs AS (
-  SELECT doc_id, n_chars,
-         CAST(SUM(cnt) AS BIGINT) AS n_bg,
-         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_bg_occ
-  FROM bgc GROUP BY doc_id, n_chars),
-topb AS (
-  SELECT doc_id, cnt, bg,
-         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, bg DESC) AS rn
-  FROM bgc)
-SELECT w.doc_id, w.n_words,
-       ROUND(w.n_uniq / w.n_words, 6) AS uniq_word_frac,
-       ROUND(tw.cnt / w.n_words, 6) AS top_word_frac,
-       ROUND(w.dup_occ / w.n_words, 6) AS dup_word_frac,
-       ROUND(tb.cnt * LENGTH(tb.bg) / b.n_chars, 6) AS top_bigram_char_frac,
-       ROUND(b.dup_bg_occ / b.n_bg, 6) AS dup_bigram_frac
-FROM ws w
--- null-safe: Spark computes the top word IN-GROUP (max struct), so the
--- merged NULL-doc_id group still gets a value; a NULL-dropping join
--- here would lose it. The bs/topb joins mirror Spark's REAL (and
--- equally NULL-insensitive) left join and stay plain equality.
-LEFT JOIN topw tw ON tw.doc_id IS NOT DISTINCT FROM w.doc_id AND tw.rn = 1
-LEFT JOIN bs b ON b.doc_id = w.doc_id
-LEFT JOIN topb tb ON tb.doc_id = w.doc_id AND tb.rn = 1""",
-    )
-    reg.add(
-        "text_gopher_filters",
-        gopher_filters,
-        f"""WITH m AS ({GOPHER_METRICS_SQL})
-SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
-       ellipsis_frac, alpha_word_frac,
-       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS} AS BIGINT)
-         AS f_word_count,
-       CAST(mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
-         AS BIGINT) AS f_mean_word_len,
-       CAST(symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO} AS BIGINT) AS f_symbol_ratio,
-       CAST(bullet_frac <= {GOPHER_MAX_BULLET_FRAC} AS BIGINT) AS f_bullet_lines,
-       CAST(ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC} AS BIGINT) AS f_ellipsis_lines,
-       CAST(alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT) AS f_alpha_words,
-       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS}
-            AND mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
-            AND symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO}
-            AND bullet_frac <= {GOPHER_MAX_BULLET_FRAC}
-            AND ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC}
-            AND alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT)
-         AS keep_gopher
-FROM m""",
-    )
-
-
 def search_text_compose(spark, sf_dir):
     """V6: search text = title + ' ' + description + ' ' + text[:500]
     (ref: create_lancedb_index.py:18-44)."""
@@ -859,117 +754,106 @@ SELECT event_id, {sql_str_to_bigint("_k")} AS k_value FROM j""",
  TRY_CAST(regexp_replace(CAST(p_size AS VARCHAR) || '.25 %', '[£$€,%\s]', '', 'g') AS DOUBLE) AS clean_pct
 FROM part""",
     )
-
-
-# --------------------------------------------------- corpus statistics (r6)
-
-TFIDF_TOPK = 3  # keywords emitted per document
-
-
-def tfidf_topk(spark, sf_dir):
-    """TF-IDF keyword extraction: per-document top-3 terms by
-    tf · ln((N+1)/(df+1)) (smoothed idf). The corpus pass is two keyed
-    aggregations (term frequency per doc, document frequency per term)
-    joined on the term key, with the N scalar broadcast — tf-idf at
-    100 TB is exactly this shape, no collect, no cross join. Ties break
-    alphabetically for determinism."""
-    from pyspark.sql import Window as W
-
-    docs = load(spark, sf_dir, "documents")
-    words = _words(docs)
-    tf = words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dfreq = (
-        words.distinct().groupBy("term").agg(F.count("*").alias("df"))
+    reg.add(
+        "text_winnowing_fingerprints",
+        winnowing_fingerprints,
+        r"""WITH sh AS (
+  SELECT doc_id, i AS pos,
+         words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] AS shingle
+  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words
+        FROM documents WHERE doc_id IS NOT NULL) w,
+       UNNEST(range(0, len(words) - 2)) AS t(i)
+  WHERE len(words) >= 3
+),
+hashed AS (
+  SELECT doc_id, pos,
+         CAST('0x' || substring(md5(shingle), 1, 12) AS BIGINT) AS h
+  FROM sh
+),
+wins AS (
+  SELECT doc_id,
+         MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
+                      ROWS BETWEEN CURRENT ROW AND %d FOLLOWING) AS fp
+  FROM hashed
+)
+SELECT DISTINCT doc_id, fp FROM wins""" % (WINNOW_W - 1),
     )
-    n_docs = docs.agg(F.count("*").alias("n_docs"))
-    scored = (
-        tf.join(dfreq, "term")
-        .join(F.broadcast(n_docs))
-        .withColumn(
-            "tfidf",
-            F.round(
-                F.col("tf") * F.log((F.col("n_docs") + 1) / (F.col("df") + 1)), 6
-            ),
-        )
+    reg.add(
+        "text_repetition_signals",
+        repetition_signals,
+        r"""WITH words AS (
+  SELECT doc_id, w FROM (
+    SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS w
+    FROM documents) t
+  WHERE LENGTH(w) > 0
+),
+wc AS (SELECT doc_id, w, COUNT(*) AS cnt FROM words GROUP BY doc_id, w),
+ws AS (
+  SELECT doc_id,
+         CAST(SUM(cnt) AS BIGINT) AS n_words,
+         CAST(COUNT(*) AS BIGINT) AS n_uniq,
+         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_occ
+  FROM wc GROUP BY doc_id),
+topw AS (
+  SELECT doc_id, cnt, w,
+         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, w DESC) AS rn
+  FROM wc),
+bg AS (
+  SELECT doc_id, LENGTH(text) AS n_chars, ws[i + 1] || ' ' || ws[i + 2] AS bg
+  FROM (SELECT doc_id, text,
+               string_split_regex(lower(trim(text)), '\s+') AS ws
+        FROM documents) t,
+       UNNEST(range(0, len(ws) - 1)) AS u(i)
+  WHERE len(ws) >= 2),
+bgc AS (SELECT doc_id, n_chars, bg, COUNT(*) AS cnt
+        FROM bg GROUP BY doc_id, n_chars, bg),
+bs AS (
+  SELECT doc_id, n_chars,
+         CAST(SUM(cnt) AS BIGINT) AS n_bg,
+         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_bg_occ
+  FROM bgc GROUP BY doc_id, n_chars),
+topb AS (
+  SELECT doc_id, cnt, bg,
+         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, bg DESC) AS rn
+  FROM bgc)
+SELECT w.doc_id, w.n_words,
+       ROUND(w.n_uniq / w.n_words, 6) AS uniq_word_frac,
+       ROUND(tw.cnt / w.n_words, 6) AS top_word_frac,
+       ROUND(w.dup_occ / w.n_words, 6) AS dup_word_frac,
+       ROUND(tb.cnt * LENGTH(tb.bg) / b.n_chars, 6) AS top_bigram_char_frac,
+       ROUND(b.dup_bg_occ / b.n_bg, 6) AS dup_bigram_frac
+FROM ws w
+-- null-safe: Spark computes the top word IN-GROUP (max struct), so the
+-- merged NULL-doc_id group still gets a value; a NULL-dropping join
+-- here would lose it. The bs/topb joins mirror Spark's REAL (and
+-- equally NULL-insensitive) left join and stay plain equality.
+LEFT JOIN topw tw ON tw.doc_id IS NOT DISTINCT FROM w.doc_id AND tw.rn = 1
+LEFT JOIN bs b ON b.doc_id = w.doc_id
+LEFT JOIN topb tb ON tb.doc_id = w.doc_id AND tb.rn = 1""",
     )
-    w = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), "term")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= TFIDF_TOPK)
-        .select("doc_id", "rnk", "term", "tf", "df", "tfidf")
+    reg.add(
+        "text_gopher_filters",
+        gopher_filters,
+        f"""WITH m AS ({GOPHER_METRICS_SQL})
+SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
+       ellipsis_frac, alpha_word_frac,
+       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS} AS BIGINT)
+         AS f_word_count,
+       CAST(mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
+         AS BIGINT) AS f_mean_word_len,
+       CAST(symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO} AS BIGINT) AS f_symbol_ratio,
+       CAST(bullet_frac <= {GOPHER_MAX_BULLET_FRAC} AS BIGINT) AS f_bullet_lines,
+       CAST(ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC} AS BIGINT) AS f_ellipsis_lines,
+       CAST(alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT) AS f_alpha_words,
+       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS}
+            AND mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
+            AND symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO}
+            AND bullet_frac <= {GOPHER_MAX_BULLET_FRAC}
+            AND ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC}
+            AND alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT)
+         AS keep_gopher
+FROM m""",
     )
-
-
-BIGRAM_SMOOTH_K = 0.5  # add-k smoothing mass
-
-
-def bigram_nll(spark, sf_dir):
-    """CCNet-style n-gram LM quality scoring, fully in-engine: train an
-    add-k-smoothed word-bigram model on the corpus itself, then score
-    every document by its average negative log-likelihood
-    -ln((C(w1,w2)+k)/(C(w1)+k·V)) — high avg_nll = text the corpus LM
-    finds improbable (the perplexity-filter signal, reference-free).
-    Plan shape at 100 TB: bigram and unigram count tables are keyed
-    aggregations; scoring joins the document bigrams back on those keys
-    (equi-joins, broadcast V scalar) — the model IS a DataFrame, never
-    driver-side state. Per-bigram nll is rounded to 4 dp BEFORE the
-    decimal-cast average so sub-ulp libm differences between engines
-    can't flip the order-independent sum."""
-    docs = load(spark, sf_dir, "documents")
-    words_col = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    toks = docs.select("doc_id", words_col.alias("ws")).filter(F.size("ws") >= 2)
-    uni = toks.select(F.explode("ws").alias("w1")).groupBy("w1").agg(
-        F.count("*").alias("c1")
-    )
-    bi = toks.select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("ws"), 1, F.size("ws") - 1),
-                F.slice(F.col("ws"), 2, F.size("ws") - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select("doc_id", "bg.w1", "bg.w2")
-    # r19 (guide §5): bi — the document bigram stream — feeds BOTH the
-    # model counts and the scoring join; each re-ran scan + split +
-    # zip_with explode. Lazy checkpoint runs it once (interleaved A/B
-    # at sf0.1: 1.50 → 1.41 s median; one saved corpus pass at scale).
-    # Checkpointing `uni` as well was TRIED and measured WORSE
-    # (1.96 → 2.42 s median) — its vocab-key join prefers the live
-    # subtree — so uni stays re-derived.
-    bi = corpus_checkpoint(bi)
-    big = bi.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    vocab = uni.agg(F.count("*").alias("v"))
-    k = BIGRAM_SMOOTH_K
-    nll = F.round(
-        -F.log((F.col("c12") + k) / (F.col("c1") + k * F.col("v"))), 4
-    )
-    # r20 examined: folding the model into ONE type-scale nll table
-    # (ntab = big ⋈ uni ⋈ v, stream joins ntab once) was TRIED and
-    # measured WORSE at sf1 (interleaved A/B: old 5.95/7.27 vs ntab
-    # 8.15/8.97 min/median, rows identical) — both stream joins are
-    # already broadcast-hash probes, and chaining big⋈uni⋈vocab
-    # serializes uni's two corpus passes inside one broadcast-build
-    # chain, where the two-join form builds them as parallel jobs.
-    scored = (
-        bi.join(big, ["w1", "w2"])
-        .join(uni, "w1")
-        .join(F.broadcast(vocab))
-        .select("doc_id", nll.alias("nll"))
-    )
-    # NO final rounding: the decimal sum is exact and the double division
-    # bit-identical in both engines, but ROUND of a result that lands
-    # exactly on a 4-dp tie resolves differently (Spark HALF_UP vs
-    # DuckDB's double rounding) — emitting the raw quotient sidesteps it
-    return scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"),
-        davg(F.col("nll"), "avg_nll", dec="decimal(25,4)"),
-    )
-
-
-def register_round6(reg):
-    """Round-6 additions: corpus-statistics quality scoring."""
     reg.add(
         "text_tfidf_topk",
         tfidf_topk,
@@ -1169,6 +1053,117 @@ SELECT event_id, """
         "string_agg(o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities "
         "FROM (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders) "
         "GROUP BY o_orderstatus",
+    )
+    reg.add("text_kwic_contexts", kwic_contexts, _KWIC_SQL)
+    reg.add("text_cooccur_pmi", cooccur_pmi, _PMI_SQL)
+    reg.add("text_tfidf_doc_pairs", tfidf_doc_pairs, _TFIDF_PAIRS_SQL)
+    reg.add("text_zipf_fit", text_zipf_fit, _ZIPF_SQL)
+
+
+# --------------------------------------------------- corpus statistics (r6)
+
+TFIDF_TOPK = 3  # keywords emitted per document
+
+
+def tfidf_topk(spark, sf_dir):
+    """TF-IDF keyword extraction: per-document top-3 terms by
+    tf · ln((N+1)/(df+1)) (smoothed idf). The corpus pass is two keyed
+    aggregations (term frequency per doc, document frequency per term)
+    joined on the term key, with the N scalar broadcast — tf-idf at
+    100 TB is exactly this shape, no collect, no cross join. Ties break
+    alphabetically for determinism."""
+    from pyspark.sql import Window as W
+
+    docs = load(spark, sf_dir, "documents")
+    words = _words(docs)
+    tf = words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    dfreq = (
+        words.distinct().groupBy("term").agg(F.count("*").alias("df"))
+    )
+    n_docs = docs.agg(F.count("*").alias("n_docs"))
+    scored = (
+        tf.join(dfreq, "term")
+        .join(F.broadcast(n_docs))
+        .withColumn(
+            "tfidf",
+            F.round(
+                F.col("tf") * F.log((F.col("n_docs") + 1) / (F.col("df") + 1)), 6
+            ),
+        )
+    )
+    w = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), "term")
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rnk") <= TFIDF_TOPK)
+        .select("doc_id", "rnk", "term", "tf", "df", "tfidf")
+    )
+
+
+BIGRAM_SMOOTH_K = 0.5  # add-k smoothing mass
+
+
+def bigram_nll(spark, sf_dir):
+    """CCNet-style n-gram LM quality scoring, fully in-engine: train an
+    add-k-smoothed word-bigram model on the corpus itself, then score
+    every document by its average negative log-likelihood
+    -ln((C(w1,w2)+k)/(C(w1)+k·V)) — high avg_nll = text the corpus LM
+    finds improbable (the perplexity-filter signal, reference-free).
+    Plan shape at 100 TB: bigram and unigram count tables are keyed
+    aggregations; scoring joins the document bigrams back on those keys
+    (equi-joins, broadcast V scalar) — the model IS a DataFrame, never
+    driver-side state. Per-bigram nll is rounded to 4 dp BEFORE the
+    decimal-cast average so sub-ulp libm differences between engines
+    can't flip the order-independent sum."""
+    docs = load(spark, sf_dir, "documents")
+    words_col = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = docs.select("doc_id", words_col.alias("ws")).filter(F.size("ws") >= 2)
+    uni = toks.select(F.explode("ws").alias("w1")).groupBy("w1").agg(
+        F.count("*").alias("c1")
+    )
+    bi = toks.select(
+        "doc_id",
+        F.explode(
+            F.zip_with(
+                F.slice(F.col("ws"), 1, F.size("ws") - 1),
+                F.slice(F.col("ws"), 2, F.size("ws") - 1),
+                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+            )
+        ).alias("bg"),
+    ).select("doc_id", "bg.w1", "bg.w2")
+    # r19 (guide §5): bi — the document bigram stream — feeds BOTH the
+    # model counts and the scoring join; each re-ran scan + split +
+    # zip_with explode. Lazy checkpoint runs it once (interleaved A/B
+    # at sf0.1: 1.50 → 1.41 s median; one saved corpus pass at scale).
+    # Checkpointing `uni` as well was TRIED and measured WORSE
+    # (1.96 → 2.42 s median) — its vocab-key join prefers the live
+    # subtree — so uni stays re-derived.
+    bi = corpus_checkpoint(bi)
+    big = bi.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
+    vocab = uni.agg(F.count("*").alias("v"))
+    k = BIGRAM_SMOOTH_K
+    nll = F.round(
+        -F.log((F.col("c12") + k) / (F.col("c1") + k * F.col("v"))), 4
+    )
+    # r20 examined: folding the model into ONE type-scale nll table
+    # (ntab = big ⋈ uni ⋈ v, stream joins ntab once) was TRIED and
+    # measured WORSE at sf1 (interleaved A/B: old 5.95/7.27 vs ntab
+    # 8.15/8.97 min/median, rows identical) — both stream joins are
+    # already broadcast-hash probes, and chaining big⋈uni⋈vocab
+    # serializes uni's two corpus passes inside one broadcast-build
+    # chain, where the two-join form builds them as parallel jobs.
+    scored = (
+        bi.join(big, ["w1", "w2"])
+        .join(uni, "w1")
+        .join(F.broadcast(vocab))
+        .select("doc_id", nll.alias("nll"))
+    )
+    # NO final rounding: the decimal sum is exact and the double division
+    # bit-identical in both engines, but ROUND of a result that lands
+    # exactly on a 4-dp tie resolves differently (Spark HALF_UP vs
+    # DuckDB's double rounding) — emitting the raw quotient sidesteps it
+    return scored.groupBy("doc_id").agg(
+        F.count("*").alias("n_bigrams"),
+        davg(F.col("nll"), "avg_nll", dec="decimal(25,4)"),
     )
 
 
@@ -1488,10 +1483,6 @@ FROM hits, UNNEST(range(1, len(ctxs) + 1)) AS u(i)
 """
 
 
-def register_round6c(reg):
-    reg.add("text_kwic_contexts", kwic_contexts, _KWIC_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Word association: PMI co-occurrence mining
 
@@ -1608,10 +1599,6 @@ SELECT term_a, term_b, n_ab,
 FROM pairs WHERE n_ab >= {PMI_MIN_COOC}
 ORDER BY pmi DESC, term_a, term_b LIMIT 50
 """
-
-
-def register_round7(reg):
-    reg.add("text_cooccur_pmi", cooccur_pmi, _PMI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1752,10 +1739,6 @@ WHERE FLOOR(dot / (na.norm * nb.norm) * 1000000.0 + 0.5) / 1000000.0
 """
 
 
-def register_round7b(reg):
-    reg.add("text_tfidf_doc_pairs", tfidf_doc_pairs, _TFIDF_PAIRS_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Corpus diagnostics: Zipf's-law fit
 
@@ -1849,7 +1832,3 @@ SELECT CAST(k AS BIGINT) AS n_terms,
              * 1000000.0 + 0.5) / 1000000.0 AS zipf_intercept
 FROM m
 """
-
-
-def register_round7c(reg):
-    reg.add("text_zipf_fit", text_zipf_fit, _ZIPF_SQL)

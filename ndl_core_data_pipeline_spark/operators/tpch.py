@@ -836,11 +836,6 @@ def register(reg):
         "OR (p_brand = 'Brand#34' AND l_quantity BETWEEN 20 AND 30 "
         "AND p_size BETWEEN 1 AND 15)",
     )
-
-
-def register_round2(reg):
-    """Round-2 additions — registered after every round-1 query (see
-    contract.build_registry ordering note)."""
     reg.add(
         "q8_market_share",
         q8_market_share,
@@ -933,12 +928,6 @@ def register_round2(reg):
         "JOIN supplier ON l_suppkey = s_suppkey "
         "ORDER BY numwait DESC, s_name, s_suppkey LIMIT 20",
     )
-
-
-def register_round6(reg):
-    """Round-6 additions: the three classic optimizer shapes previously
-    missing — correlated scalar subquery (Q2), aggregate-threshold
-    subquery (Q11), double-correlated NOT EXISTS (Q20)."""
     reg.add(
         "q2_min_cost_supplier",
         q2_min_cost_supplier,

@@ -734,6 +734,68 @@ FROM documents""",
        ROUND(COUNT(*) / (SELECT COUNT(*) FROM documents), 6) AS share
 FROM documents GROUP BY 1 ORDER BY bucket""",
     )
+    reg.add(
+        "dedup_block_rewrite",
+        dedup_block_rewrite,
+        rf"""WITH base AS (
+  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws,
+         CAST(floor(len(string_split_regex(lower(trim(text)), '\s+'))
+              / {BLOCK_W}) AS INT) AS nb
+  FROM documents
+),
+based AS (
+  SELECT doc_id, ws, nb,
+         COALESCE(array_to_string(ws[nb * {BLOCK_W} + 1 : len(ws)], ' '), '') AS tail
+  FROM base
+),
+blocks AS (
+  SELECT doc_id, i AS idx,
+         array_to_string(ws[i * {BLOCK_W} + 1 : (i + 1) * {BLOCK_W}], ' ') AS block
+  FROM based, UNNEST(range(0, nb)) AS t(i)
+),
+ranked AS (
+  SELECT doc_id, idx, block,
+         ROW_NUMBER() OVER (PARTITION BY {_sql_hash48('block')}
+                            ORDER BY doc_id, idx) AS rn
+  FROM blocks
+),
+kept AS (
+  SELECT doc_id, COUNT(*) AS n_kept,
+         string_agg(block, ' ' ORDER BY idx) AS kept_text
+  FROM ranked WHERE rn = 1 GROUP BY doc_id
+)
+SELECT b.doc_id, CAST(b.nb AS BIGINT) AS n_blocks,
+       COALESCE(k.n_kept, 0) AS n_kept,
+       CASE
+         WHEN k.kept_text IS NOT NULL AND b.tail <> ''
+           THEN k.kept_text || ' ' || b.tail
+         WHEN k.kept_text IS NOT NULL THEN k.kept_text
+         ELSE b.tail
+       END AS clean_text
+FROM based b LEFT JOIN kept k ON b.doc_id = k.doc_id""",
+    )
+    bucket = f"{_sql_hash48('CAST(doc_id AS VARCHAR)')} % 100"
+    reg.add(
+        "pipeline_corpus_summary",
+        corpus_pipeline_summary,
+        rf"""WITH with_fp AS (
+  SELECT doc_id, n_chars,
+         len(regexp_extract_all(text, '\S+')) AS n_words,
+         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+  FROM documents
+),
+keep_first AS (SELECT fp, MIN(doc_id) AS doc_id FROM with_fp GROUP BY fp),
+deduped AS (SELECT w.* FROM with_fp w
+            JOIN keep_first k ON w.fp = k.fp AND w.doc_id = k.doc_id),
+kept AS (SELECT * FROM deduped WHERE n_chars >= {MIN_KEEP_CHARS})
+SELECT CASE WHEN {bucket} < {SPLIT_TRAIN_PCT} THEN 'train'
+            WHEN {bucket} < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
+            ELSE 'test' END AS split,
+       COUNT(*) AS n_docs,
+       TRY_CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+       TRY_CAST(SUM(n_words) AS BIGINT) AS total_words
+FROM kept GROUP BY 1""",
+    )
 
 
 # ------------------------------------------------- block-rewrite dedup (r6)
@@ -803,50 +865,6 @@ def dedup_block_rewrite(spark, sf_dir):
     )
 
 
-def register_round6(reg):
-    """Round-6 additions: rewriting exact-substring dedup."""
-    reg.add(
-        "dedup_block_rewrite",
-        dedup_block_rewrite,
-        rf"""WITH base AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws,
-         CAST(floor(len(string_split_regex(lower(trim(text)), '\s+'))
-              / {BLOCK_W}) AS INT) AS nb
-  FROM documents
-),
-based AS (
-  SELECT doc_id, ws, nb,
-         COALESCE(array_to_string(ws[nb * {BLOCK_W} + 1 : len(ws)], ' '), '') AS tail
-  FROM base
-),
-blocks AS (
-  SELECT doc_id, i AS idx,
-         array_to_string(ws[i * {BLOCK_W} + 1 : (i + 1) * {BLOCK_W}], ' ') AS block
-  FROM based, UNNEST(range(0, nb)) AS t(i)
-),
-ranked AS (
-  SELECT doc_id, idx, block,
-         ROW_NUMBER() OVER (PARTITION BY {_sql_hash48('block')}
-                            ORDER BY doc_id, idx) AS rn
-  FROM blocks
-),
-kept AS (
-  SELECT doc_id, COUNT(*) AS n_kept,
-         string_agg(block, ' ' ORDER BY idx) AS kept_text
-  FROM ranked WHERE rn = 1 GROUP BY doc_id
-)
-SELECT b.doc_id, CAST(b.nb AS BIGINT) AS n_blocks,
-       COALESCE(k.n_kept, 0) AS n_kept,
-       CASE
-         WHEN k.kept_text IS NOT NULL AND b.tail <> ''
-           THEN k.kept_text || ' ' || b.tail
-         WHEN k.kept_text IS NOT NULL THEN k.kept_text
-         ELSE b.tail
-       END AS clean_text
-FROM based b LEFT JOIN kept k ON b.doc_id = k.doc_id""",
-    )
-
-
 MIN_KEEP_CHARS = 200  # quality floor shared with the filter family
 
 
@@ -899,30 +917,4 @@ def corpus_pipeline_summary(spark, sf_dir):
             .try_cast("bigint")
             .alias("total_words"),
         )
-    )
-
-
-def register_round6b(reg):
-    """Round-6 composed-pipeline addition."""
-    bucket = f"{_sql_hash48('CAST(doc_id AS VARCHAR)')} % 100"
-    reg.add(
-        "pipeline_corpus_summary",
-        corpus_pipeline_summary,
-        rf"""WITH with_fp AS (
-  SELECT doc_id, n_chars,
-         len(regexp_extract_all(text, '\S+')) AS n_words,
-         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-  FROM documents
-),
-keep_first AS (SELECT fp, MIN(doc_id) AS doc_id FROM with_fp GROUP BY fp),
-deduped AS (SELECT w.* FROM with_fp w
-            JOIN keep_first k ON w.fp = k.fp AND w.doc_id = k.doc_id),
-kept AS (SELECT * FROM deduped WHERE n_chars >= {MIN_KEEP_CHARS})
-SELECT CASE WHEN {bucket} < {SPLIT_TRAIN_PCT} THEN 'train'
-            WHEN {bucket} < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-            ELSE 'test' END AS split,
-       COUNT(*) AS n_docs,
-       TRY_CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       TRY_CAST(SUM(n_words) AS BIGINT) AS total_words
-FROM kept GROUP BY 1""",
     )

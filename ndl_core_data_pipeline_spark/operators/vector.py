@@ -252,7 +252,7 @@ def lsh_bucket_assignment(spark, sf_dir):
         emb.select("vec_id", "label", "embedding"),
         planes,
         1,
-        keep=[("vec_id", "bigint"), ("label", "int")],
+        keep=("vec_id", "label"),
     )
     return out.select(
         "vec_id", "label", F.col("bvals")[0].alias("lsh_bucket")
@@ -324,20 +324,20 @@ def ivf_cell_assignments(spark, sf_dir, cents=None):
     if cents is None:
         cents = _centroid_arrays(emb)
     cent_rows = [(r["cell_id"], r["centroid"]) for r in cents.collect()]
+    id_t = dict(cents.dtypes)["cell_id"]  # the label type
     if not cent_rows:
         # former size(cs) > 0 guard: no cells -> no output rows
         return emb.filter(F.lit(False)).select(
             "vec_id",
-            F.lit(None).cast("int").alias("cell_id"),
+            F.lit(None).cast(id_t).alias("cell_id"),
             F.lit(None).cast("double").alias("dist2"),
         )
     per_row = _nearest_arrow(
         emb.select("vec_id", "embedding"),
         cent_rows,
-        keep=[("vec_id", "bigint")],
+        keep=("vec_id",),
         v_name="embedding",
-        v_sql_type="array<float>",
-        id_sql_type="int",
+        id_sql_type=id_t,
         with_d2=True,
     )
     return (
@@ -365,7 +365,7 @@ def ivf_topk(spark, sf_dir):
     cent_rows = [
         (r["cell_id"], r["centroid"]) for r in _centroid_arrays(emb).collect()
     ]
-    cents = _cents_df(spark, cent_rows, id_sql_type="INT")
+    cents = _cents_df(spark, cent_rows, id_sql_type=dict(emb.dtypes)["label"])
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     probed = (
         cents.crossJoin(F.broadcast(q))
@@ -512,7 +512,7 @@ def embedding_cosine_near_dup(spark, sf_dir):
         cand.join(a, "vec_a").join(b, "vec_b").select(
             "label", "vec_a", "vec_b", "emb_a", "emb_b"
         ),
-        keep=[("label", label_t), ("vec_a", "bigint"), ("vec_b", "bigint")],
+        keep=("label", "vec_a", "vec_b"),
     )
     return (
         verified.select(
@@ -559,6 +559,14 @@ def _band_value_structs(emb_sql: str, planes, n_bands: int):
             )
         )
     return out
+
+
+def _ddl(df, *names):
+    """`name type` DDL fields for columns of `df`, each type read from
+    df's schema — pass-through columns of the Arrow kernels keep their
+    input types (a bigint `label` stays bigint)."""
+    types = dict(df.dtypes)
+    return [f"{nm} {types[nm]}" for nm in names]
 
 
 def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
@@ -618,8 +626,8 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
                     for k in range(w):
                         v += bitvals[:, bnd * w + k] << k
                     bv[idx, bnd] = v
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm, _ in keep]
-            names = [nm for nm, _ in keep]
+            arrays = [b.column(b.schema.get_field_index(nm)) for nm in keep]
+            names = list(keep)
             arrays.append(vcol)
             names.append(v_name)
             arrays.append(
@@ -628,11 +636,7 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
             names.append("bvals")
             yield pa.RecordBatch.from_arrays(arrays, names)
 
-    v_sql_type = dict(df.dtypes)[v_name]  # array<float> or array<double>
-    schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + [f"{v_name} {v_sql_type}", "bvals array<bigint>"]
-    )
+    schema = ", ".join(_ddl(df, *keep, v_name) + ["bvals array<bigint>"])
     return df.mapInArrow(bands, schema)
 
 
@@ -716,8 +720,8 @@ def _cos_verify_arrow(df, *, a_name="emb_a", b_name="emb_b", keep, dim=64):
                 dot_o[ri] = _fold_dot(a_py, b_py)
                 sa_o[ri] = _fold_dot(a_py, a_py)
                 sb_o[ri] = _fold_dot(b_py, b_py)
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm, _ in keep]
-            names = [nm for nm, _ in keep]
+            arrays = [b.column(b.schema.get_field_index(nm)) for nm in keep]
+            names = list(keep)
             arrays.append(pa.array(dot_o, type=pa.float64()))
             names.append("dot")
             arrays.append(pa.array(sa_o, type=pa.float64()))
@@ -726,10 +730,7 @@ def _cos_verify_arrow(df, *, a_name="emb_a", b_name="emb_b", keep, dim=64):
             names.append("sb")
             yield pa.RecordBatch.from_arrays(arrays, names)
 
-    schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + ["dot double", "sa double", "sb double"]
-    )
+    schema = ", ".join(_ddl(df, *keep) + ["dot double", "sa double", "sb double"])
     out = df.mapInArrow(verify, schema)
     return out.withColumn(
         "cos_raw", F.col("dot") / (F.sqrt("sa") * F.sqrt("sb"))
@@ -782,7 +783,7 @@ def lsh_near_dup_pairs(
         emb.select("vec_id", "embedding"),
         planes,
         n_bands,
-        keep=[("vec_id", "bigint")],
+        keep=("vec_id",),
     ).select(
         "vec_id", "embedding", F.posexplode("bvals").alias("band", "bval")
     )
@@ -840,7 +841,7 @@ def lsh_near_dup_pairs(
         pair_ids.join(a, "vec_a").join(b, "vec_b").select(
             "vec_a", "vec_b", "emb_a", "emb_b"
         ),
-        keep=[("vec_a", "bigint"), ("vec_b", "bigint")],
+        keep=("vec_a", "vec_b"),
     )
     return (
         verified.select(
@@ -860,6 +861,8 @@ def embedding_lsh_near_dup(spark, sf_dir, min_cos: float = EMB_NEAR_DUP_MIN_COS)
 
 
 def register(reg):
+    from .dedup import MAX_BUCKET_MEMBERS
+
     dot_sql = (
         "list_sum(list_transform(list_zip({a}, {b}), "
         "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
@@ -981,33 +984,6 @@ def register(reg):
         "SELECT vec_id, label, CAST(" + _lsh_bit_terms_sql() + " AS BIGINT) AS lsh_bucket "
         "FROM (SELECT vec_id, label, embedding, len(embedding) AS dim FROM embeddings) t",
     )
-
-
-def _lsh_bit_terms_sql() -> str:
-    """DuckDB expression for the 16-bit signature, reproducing
-    hyperplane_matrix bit-for-bit (expects columns embedding, dim)."""
-    hp = "(( ({j}*31 + d) * 2654435761 ) % 2001) / 1000.0 - 1.0"
-    return " + ".join(
-        "(CASE WHEN list_sum(list_transform(range(0, dim), "
-        f"d -> CAST(embedding[d + 1] AS DOUBLE) * ({hp.format(j=j)}))) > 0 "
-        f"THEN 1 ELSE 0 END) * {2**j}"
-        for j in range(LSH_SIG_BITS)
-    )
-
-
-def register_round2(reg):
-    """Round-2 additions, registered AFTER every round-1 query (see
-    contract.build_registry): the driver verifies a bounded window per
-    round, and a new query must not displace a never-checked one."""
-    from .dedup import MAX_BUCKET_MEMBERS
-
-    dot_sql = (
-        "list_sum(list_transform(list_zip({a}, {b}), "
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    )
-    norm_sql = (
-        "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
     pc = (
         dot_sql.format(a="ea.embedding", b="eb.embedding")
         + " / ("
@@ -1040,6 +1016,67 @@ FROM pairs
 JOIN embeddings ea ON ea.vec_id = vec_a
 JOIN embeddings eb ON eb.vec_id = vec_b
 WHERE ROUND({pc}, 6) >= {EMB_NEAR_DUP_MIN_COS}""",
+    )
+    pq_cte = (
+        "cb AS ("
+        "  SELECT CAST((i - 1) // 8 AS INT) AS m, label AS code, "
+        "  CAST((i - 1) % 8 AS BIGINT) AS spos, "
+        "  ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cval "
+        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
+        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
+        "  GROUP BY m, code, spos), "
+        "cb_arr AS ("
+        "  SELECT m, code, list(cval ORDER BY spos) AS subcent "
+        "  FROM cb GROUP BY m, code), "
+        "sub AS ("
+        "  SELECT vec_id, label, CAST((i - 1) // 8 AS INT) AS m, "
+        "  list(CAST(embedding[i] AS DOUBLE) ORDER BY i) AS subvec "
+        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
+        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
+        "  GROUP BY vec_id, label, m), "
+        "scored AS ("
+        "  SELECT vec_id, label, s.m AS m, code, "
+        + sq_l2.format(a="s.subvec", b="c.subcent")
+        + "  AS d2 FROM sub s JOIN cb_arr c ON s.m = c.m), "
+        "best AS ("
+        "  SELECT vec_id, label, m, code, d2, "
+        "  ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn "
+        "  FROM scored)"
+    )
+    reg.add(
+        "vector_pq_codes",
+        pq_codes,
+        "WITH " + pq_cte + " "
+        "SELECT vec_id, m, code, ROUND(d2, 6) AS dist2 FROM best WHERE rn = 1",
+    )
+    reg.add(
+        "vector_pq_adc_topk",
+        pq_adc_topk,
+        "WITH " + pq_cte + ", "
+        "lut AS (SELECT m, code, ROUND(d2, 6) AS qd2 "
+        "        FROM scored WHERE vec_id = 0) "
+        "SELECT b.vec_id, b.label, "
+        "CAST(SUM(CAST(l.qd2 AS DECIMAL(25,6))) AS DOUBLE) AS adc_d2 "
+        "FROM best b JOIN lut l ON b.m = l.m AND b.code = l.code "
+        "WHERE b.rn = 1 AND b.vec_id <> 0 "
+        "GROUP BY b.vec_id, b.label "
+        "ORDER BY adc_d2, vec_id, label LIMIT 10",
+    )
+    reg.add("vector_kmeans_centroids", kmeans_centroids, _kmeans_oracle_sql())
+    reg.add("vector_ivfpq_adc_search", ivfpq_adc_search, _ivfpq_oracle_sql())
+    reg.add("vector_matryoshka_topk", matryoshka_prefix_topk, _mrl_sql())
+    reg.add("vector_ann_recall_report", ann_recall_report, _ann_recall_sql())
+
+
+def _lsh_bit_terms_sql() -> str:
+    """DuckDB expression for the 16-bit signature, reproducing
+    hyperplane_matrix bit-for-bit (expects columns embedding, dim)."""
+    hp = "(( ({j}*31 + d) * 2654435761 ) % 2001) / 1000.0 - 1.0"
+    return " + ".join(
+        "(CASE WHEN list_sum(list_transform(range(0, dim), "
+        f"d -> CAST(embedding[d + 1] AS DOUBLE) * ({hp.format(j=j)}))) > 0 "
+        f"THEN 1 ELSE 0 END) * {2**j}"
+        for j in range(LSH_SIG_BITS)
     )
 
 
@@ -1179,7 +1216,7 @@ def pq_codes(spark, sf_dir):
     enc = _pq_encode_arrow(
         emb.select("vec_id", "embedding"),
         cw,
-        keep=[("vec_id", "bigint")],
+        keep=("vec_id",),
         v_name="embedding",
         with_d2=True,
     )
@@ -1215,7 +1252,7 @@ def pq_adc_topk(spark, sf_dir):
     codes = _pq_encode_arrow(
         emb.filter(F.col("vec_id") != 0).select("vec_id", "label", "embedding"),
         cw,
-        keep=[("vec_id", "bigint"), ("label", "int")],
+        keep=("vec_id", "label"),
         v_name="embedding",
     )
     cb_df = spark.createDataFrame(
@@ -1238,59 +1275,6 @@ def pq_adc_topk(spark, sf_dir):
         # label tiebreak: totality over the output row (r16 lint)
         .orderBy("adc_d2", "vec_id", "label")
         .limit(10)
-    )
-
-
-def register_round6(reg):
-    """Round-6 vector additions: product quantization (encode + ADC scan)."""
-    sq_l2 = (
-        "list_sum(list_transform(list_zip({a}, {b}), "
-        "x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2])))"
-    )
-    pq_cte = (
-        "cb AS ("
-        "  SELECT CAST((i - 1) // 8 AS INT) AS m, label AS code, "
-        "  CAST((i - 1) % 8 AS BIGINT) AS spos, "
-        "  ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cval "
-        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
-        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
-        "  GROUP BY m, code, spos), "
-        "cb_arr AS ("
-        "  SELECT m, code, list(cval ORDER BY spos) AS subcent "
-        "  FROM cb GROUP BY m, code), "
-        "sub AS ("
-        "  SELECT vec_id, label, CAST((i - 1) // 8 AS INT) AS m, "
-        "  list(CAST(embedding[i] AS DOUBLE) ORDER BY i) AS subvec "
-        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
-        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
-        "  GROUP BY vec_id, label, m), "
-        "scored AS ("
-        "  SELECT vec_id, label, s.m AS m, code, "
-        + sq_l2.format(a="s.subvec", b="c.subcent")
-        + "  AS d2 FROM sub s JOIN cb_arr c ON s.m = c.m), "
-        "best AS ("
-        "  SELECT vec_id, label, m, code, d2, "
-        "  ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn "
-        "  FROM scored)"
-    )
-    reg.add(
-        "vector_pq_codes",
-        pq_codes,
-        "WITH " + pq_cte + " "
-        "SELECT vec_id, m, code, ROUND(d2, 6) AS dist2 FROM best WHERE rn = 1",
-    )
-    reg.add(
-        "vector_pq_adc_topk",
-        pq_adc_topk,
-        "WITH " + pq_cte + ", "
-        "lut AS (SELECT m, code, ROUND(d2, 6) AS qd2 "
-        "        FROM scored WHERE vec_id = 0) "
-        "SELECT b.vec_id, b.label, "
-        "CAST(SUM(CAST(l.qd2 AS DECIMAL(25,6))) AS DOUBLE) AS adc_d2 "
-        "FROM best b JOIN lut l ON b.m = l.m AND b.code = l.code "
-        "WHERE b.rn = 1 AND b.vec_id <> 0 "
-        "GROUP BY b.vec_id, b.label "
-        "ORDER BY adc_d2, vec_id, label LIMIT 10",
     )
 
 
@@ -1374,14 +1358,14 @@ def _argmin_scalar(v, cents):
     return best
 
 
-def _nearest_arrow(df, cents, *, keep, v_name, v_sql_type, id_sql_type,
-                   with_d2=False, out_id="cell_id"):
+def _nearest_arrow(df, cents, *, keep, v_name, id_sql_type, with_d2=False,
+                   out_id="cell_id"):
     """Append the nearest-centroid id (and optionally its d2) per row via
     one numpy pass over Arrow batches — replaces the interpreted HOF
     argmin + the crossJoin/broadcast of the centroid row (guide §4.2 /
     §2.4). `cents` is the driver-held [(id, centroid), ...] list (K rows
-    — the same table the former plan broadcast). `keep` lists
-    (name, sql_type) passthrough columns; only keep + v cross the Python
+    — the same table the former plan broadcast). `keep` names the
+    passthrough columns; only keep + v cross the Python
     boundary (guide §4.1). Bit-exactness argument + hostile-case pins:
     block comment above / tests/test_round20_argmin.py."""
     cents = list(cents)
@@ -1465,8 +1449,8 @@ def _nearest_arrow(df, cents, *, keep, v_name, v_sql_type, id_sql_type,
                 if hit is not None:
                     cell_out[int(ri)] = hit[0]
                     d2_out[int(ri)] = hit[1]
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm, _ in keep]
-            names = [nm for nm, _ in keep]
+            arrays = [b.column(b.schema.get_field_index(nm)) for nm in keep]
+            names = list(keep)
             arrays.append(vcol)
             names.append(v_name)
             arrays.append(
@@ -1479,8 +1463,8 @@ def _nearest_arrow(df, cents, *, keep, v_name, v_sql_type, id_sql_type,
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + [f"{v_name} {v_sql_type}", f"{out_id} {id_sql_type}"]
+        _ddl(df, *keep, v_name)
+        + [f"{out_id} {id_sql_type}"]
         + (["d2 double"] if with_d2 else [])
     )
     return df.mapInArrow(assign, schema)
@@ -1613,9 +1597,9 @@ def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
             take = np.repeat(np.arange(n), reps)
             arrays = [
                 b.column(b.schema.get_field_index(nm)).take(pa.array(take))
-                for nm, _ in keep
+                for nm in keep
             ]
-            names = [nm for nm, _ in keep]
+            names = list(keep)
             arrays.append(
                 pa.array([m for row in m_out if row for m in row], type=pa.int32())
             )
@@ -1637,9 +1621,7 @@ def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + ["m int", "code int"]
-        + (["d2 double"] if with_d2 else [])
+        _ddl(df, *keep) + ["m int", "code int"] + (["d2 double"] if with_d2 else [])
     )
     return df.mapInArrow(encode, schema)
 
@@ -1761,9 +1743,8 @@ def _kmeans_means(emb, cents_rows):
         assigned = _nearest_arrow(
             emb.filter(F.col("vec_id").isNotNull()).select("v"),
             cents_rows,
-            keep=[],
+            keep=(),
             v_name="v",
-            v_sql_type="array<double>",
             id_sql_type="bigint",
         )
     dims = assigned.select("cell_id", F.posexplode("v").alias("pos", "x"))
@@ -1901,10 +1882,6 @@ def _kmeans_oracle_sql() -> str:
     )
 
 
-def register_round6b(reg):
-    reg.add("vector_kmeans_centroids", kmeans_centroids, _kmeans_oracle_sql())
-
-
 # ------------------------------------------------- IVF-PQ end-to-end search
 
 IVFPQ_NPROBE = 2
@@ -2019,9 +1996,8 @@ def ivfpq_adc_search(spark, sf_dir):
                 "vec_id", "label", "v"
             ),
             cents_rows,
-            keep=[("vec_id", "bigint"), ("label", "int")],
+            keep=("vec_id", "label"),
             v_name="v",
-            v_sql_type="array<double>",
             id_sql_type="bigint",
         )
     resid = best.select(
@@ -2080,7 +2056,7 @@ def ivfpq_adc_search(spark, sf_dir):
     codes = _pq_encode_arrow(
         resid.filter(F.col("vec_id") != 0),
         cw,
-        keep=[("vec_id", "bigint"), ("label", "int"), ("cell_id", "bigint")],
+        keep=("vec_id", "label", "cell_id"),
         v_name="r",
     )
     # the query-cell probe needs distances for vec 0 only: a 1×K
@@ -2198,10 +2174,6 @@ def _ivfpq_oracle_sql() -> str:
     )
 
 
-def register_round7(reg):
-    reg.add("vector_ivfpq_adc_search", ivfpq_adc_search, _ivfpq_oracle_sql())
-
-
 # ------------------------------------------- matryoshka prefix-dim rerank
 
 MRL_PREFIX_DIMS = 16
@@ -2295,10 +2267,6 @@ SELECT c.vec_id, c.label, c.pre_cos,
 FROM cands c, q
 ORDER BY cos_sim DESC, c.vec_id, c.label, c.pre_cos LIMIT 10
 """
-
-
-def register_round7b(reg):
-    reg.add("vector_matryoshka_topk", matryoshka_prefix_topk, _mrl_sql())
 
 
 # ------------------------------------------------- ANN quality evaluation
@@ -2482,7 +2450,3 @@ SELECT q.query_id,
          AS recall_at_k
 FROM q LEFT JOIN ncand n USING (query_id) LEFT JOIN hits h USING (query_id)
 """
-
-
-def register_round7c(reg):
-    reg.add("vector_ann_recall_report", ann_recall_report, _ann_recall_sql())

@@ -470,6 +470,13 @@ def register(reg) -> None:
     reg.add("agg_heavy_hitters", agg_heavy_hitters, _HH_SQL)
     reg.add("sort_zorder_cluster", sort_zorder_cluster, _ZORDER_SQL)
     reg.add("layout_zonemap_stats", layout_zonemap_stats, _ZONEMAP_SQL)
+    reg.add("calendar_densify", calendar_densify, _CAL_SQL)
+    reg.add("feature_standardize", feature_standardize, _STD_SQL)
+    reg.add("feature_one_hot", feature_one_hot, _ONEHOT_SQL)
+    reg.add("join_point_in_time_scd2", join_point_in_time_scd2, _PIT_SQL)
+    reg.add("feature_winsorize", feature_winsorize, _WINSOR_SQL)
+    reg.add("profile_table_stats", profile_table_stats, _profile_sql())
+    reg.add("snapshot_diff_summary", snapshot_diff_summary, _SNAPDIFF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -604,12 +611,6 @@ FROM orders o JOIN vocab ON o.o_orderpriority = vocab.o_orderpriority
 """
 
 
-def register_round6b(reg) -> None:
-    reg.add("calendar_densify", calendar_densify, _CAL_SQL)
-    reg.add("feature_standardize", feature_standardize, _STD_SQL)
-    reg.add("feature_one_hot", feature_one_hot, _ONEHOT_SQL)
-
-
 def join_point_in_time_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time (AS OF) dimension join — the query SCD2 dimensions
     exist to serve: each purchase event joins the state interval valid
@@ -658,10 +659,6 @@ FROM events e JOIN dim d ON e.user_id = d.user_id
 WHERE e.event_type = 'purchase'
   AND d.valid_from <= e.ts AND (d.valid_to IS NULL OR e.ts < d.valid_to)
 """
-
-
-def register_round7(reg) -> None:
-    reg.add("join_point_in_time_scd2", join_point_in_time_scd2, _PIT_SQL)
 
 
 WINSOR_LO, WINSOR_HI = 0.05, 0.95
@@ -853,11 +850,6 @@ FROM (SELECT v, COUNT(*) AS c FROM (SELECT {expr} AS v FROM orders)
     return " UNION ALL ".join(parts)
 
 
-def register_round7b(reg) -> None:
-    reg.add("feature_winsorize", feature_winsorize, _WINSOR_SQL)
-    reg.add("profile_table_stats", profile_table_stats, _profile_sql())
-
-
 _SNAP_CUTOFF = "1997-06-01"
 
 
@@ -984,7 +976,3 @@ SELECT op, COUNT(*) AS n,
        CAST(COALESCE(SUM(nch), 0) AS BIGINT) AS n_col_changes
 FROM d GROUP BY op
 """
-
-
-def register_round7c(reg) -> None:
-    reg.add("snapshot_diff_summary", snapshot_diff_summary, _SNAPDIFF_SQL)

@@ -233,25 +233,6 @@ def register(reg):
         "(PARTITION BY o_custkey ORDER BY CAST(epoch(o_orderdate) AS BIGINT) "
         f"RANGE BETWEEN {30 * 86400} PRECEDING AND CURRENT ROW)",
     )
-
-
-def distribution_family(spark, sf_dir):
-    """Engine surface: percent_rank / cume_dist per nation — the relative-
-    position companions to `window_ranking_family`. Integer-ratio doubles
-    are bit-identical across engines (same IEEE division), no rounding
-    needed."""
-    c = load(spark, sf_dir, "customer")
-    w = W.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
-    return c.select(
-        "c_custkey",
-        "c_nationkey",
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"),
-    )
-
-
-def register_round6(reg):
-    """Round-6 window addition: distribution functions."""
     reg.add(
         "window_distribution_family",
         distribution_family,
@@ -271,6 +252,23 @@ def register_round6(reg):
         "SELECT o_custkey, MIN(d) AS streak_start, MAX(d) AS streak_end, "
         "COUNT(*) AS streak_days FROM isl GROUP BY o_custkey, island "
         "HAVING COUNT(*) >= 2",
+    )
+    reg.add("window_distributed_prefix_sum", distributed_prefix_sum, _PREFIX_SQL)
+    reg.add("window_rolling_stats", rolling_stats, _ROLL_SQL)
+
+
+def distribution_family(spark, sf_dir):
+    """Engine surface: percent_rank / cume_dist per nation — the relative-
+    position companions to `window_ranking_family`. Integer-ratio doubles
+    are bit-identical across engines (same IEEE division), no rounding
+    needed."""
+    c = load(spark, sf_dir, "customer")
+    w = W.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
+    return c.select(
+        "c_custkey",
+        "c_nationkey",
+        F.percent_rank().over(w).alias("pct_rank"),
+        F.cume_dist().over(w).alias("cume"),
     )
 
 
@@ -368,10 +366,6 @@ FROM events
 """
 
 
-def register_round6b(reg):
-    reg.add("window_distributed_prefix_sum", distributed_prefix_sum, _PREFIX_SQL)
-
-
 ROLL_N = 7  # trailing rows per frame (current + 6 preceding)
 
 
@@ -449,7 +443,3 @@ SELECT event_id, user_id, CAST(n_window AS BIGINT) AS n_window,
              * 1000000.0 + 0.5) / 1000000.0 AS roll_z
 FROM f
 """
-
-
-def register_round7(reg):
-    reg.add("window_rolling_stats", rolling_stats, _ROLL_SQL)

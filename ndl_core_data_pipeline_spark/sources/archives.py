@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .listing import binary_files
+
 ARCHIVE_CELLS_SCHEMA = (
     "archive string, member string, row_idx bigint, cells array<string>"
 )
@@ -58,13 +60,7 @@ def scan_zip_tables(spark: SparkSession, path: str) -> DataFrame:
     """Distributed zip-of-CSVs scan → (archive, member, row_idx, cells)."""
     import pandas as pd
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.[zZ][iI][pP]")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.zip$"))
-        .select("path", "content")
-    )
+    files = binary_files(spark, path, ("zip",))
 
     def run(batches):
         for pdf in batches:

@@ -19,7 +19,8 @@ import zipfile
 from xml.etree import ElementTree
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .listing import binary_files
 
 _W_NS = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 
@@ -57,13 +58,7 @@ def scan_docx(spark: SparkSession, path: str) -> DataFrame:
     n_paragraphs, n_chars, text, error) per document."""
     import pandas as pd
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.[dD][oO][cC][xX]")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.docx$"))
-        .select("path", "content")
-    )
+    files = binary_files(spark, path, ("docx",))
 
     def run(batches):
         for pdf in batches:

@@ -22,7 +22,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .listing import binary_files
 
 MD_TEXT_SCHEMA = (
     "path string, meta map<string,string>, n_chars bigint, "
@@ -85,13 +86,7 @@ def scan_markdown(spark: SparkSession, path: str) -> DataFrame:
     """Distributed markdown scan: (path, meta, n_chars, text, error)."""
     import pandas as pd
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{[mM][dD],[mM][aA][rR][kK][dD][oO][wW][nN]}")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.(md|markdown)$"))
-        .select("path", "content")
-    )
+    files = binary_files(spark, path, ("md", "markdown"))
 
     def run(batches):
         for pdf in batches:

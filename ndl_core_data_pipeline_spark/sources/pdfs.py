@@ -14,7 +14,8 @@ cost is the parser itself.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .listing import binary_files
 
 # text plus per-file outcome; a corrupt document yields an error row, not
 # a failed scan (same fault-isolation contract as spreadsheet.scan_workbooks)
@@ -26,15 +27,7 @@ def scan_pdfs(spark: SparkSession, path: str) -> DataFrame:
     text, error) per document."""
     import pandas as pd
 
-    files = (
-        spark.read.format("binaryFile")
-        # prune at the LISTING so non-PDF bytes are never read
-        .option("pathGlobFilter", "*.[pP][dD][fF]")  # any-case .pdf — the
-        # rlike post-filter is (?i), so the listing glob must be too
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.pdf$"))
-        .select("path", "content")
-    )
+    files = binary_files(spark, path, ("pdf",))
 
     def run(batches):
         from ..functions.udfs import extract_pdf_text

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.infer import infer_and_cast
+from .listing import binary_files
 
 FILE_READ_TIMEOUT_S = 60  # spreadsheet_to_parquet.py:43
 
@@ -95,16 +96,7 @@ def scan_workbooks(spark: SparkSession, path: str) -> DataFrame:
     """
     import pandas as pd
 
-    files = (
-        spark.read.format("binaryFile")
-        # pathGlobFilter prunes at the LISTING, so non-workbook files are
-        # never read at all (binaryFile pushes down only length/modtime
-        # predicates — a post-hoc rlike on path would still load bytes)
-        .option("pathGlobFilter", "*.{[xX][lL][sS][xX],[oO][dD][sS]}")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.(xlsx|ods)$"))
-        .select("path", "content")
-    )
+    files = binary_files(spark, path, ("xlsx", "ods"))
 
     def run(batches):
         for pdf in batches:

@@ -16,9 +16,9 @@ Steps (each skippable via --skip):
   artifacts  git must show NO untracked/modified round artifacts
              (BENCH_r*/CORRECTNESS_r*/*_r*.json/bench_detail.json) —
              the defect that recurred five consecutive rounds
-  pins       contract._FORCE_FRONT must be inert (self-released) unless
-             a pin was placed THIS round; prints the predicted driver
-             window composition (first 50 of queries()) by staleness
+  pins       prints the predicted driver window composition (first 50
+             of queries()) by staleness; fails if an oracle-less query
+             holds a window slot
   sweeps     reports pass counts from the standing determinism-sweep
              checkpoints in .scale/ so COVERAGE can cite them
 
@@ -273,23 +273,20 @@ def step_pins(report: dict) -> bool:
     from ndl_core_data_pipeline_spark import contract
 
     last_green = contract._last_green_rounds()
-    active = contract._active_pins(last_green)
     reg = contract.build_registry()
     window = list(reg.queries)[:50]
     comp: dict[int, int] = {}
     for n in window:
         comp[last_green.get(n, 0)] = comp.get(last_green.get(n, 0), 0) + 1
+    oracle_less = [n for n in window if n not in reg.oracles]
     report["pins"] = {
-        "active_pins": active,
         "window_staleness_composition": {
             f"r{k}" if k else "never": v for k, v in sorted(comp.items())
         },
-        "oracle_less_in_window": [n for n in window if n not in reg.oracles],
+        "oracle_less_in_window": oracle_less,
     }
-    # active pins are fine mid-round (a pin placed this round is active by
-    # definition); they only FAIL certification if the pinned query is not
-    # actually in the verification window, which would waste the pin
-    return all(n in window for n in active)
+    # an oracle-less query can only ever record err=no_oracle, wasting a slot
+    return not oracle_less
 
 
 def step_sweeps(report: dict) -> bool:

@@ -1,6 +1,6 @@
-"""Driver-window rotation tests: the registry fronts forced-semantics
-queries, then never-green / stalest queries, computed from the
-CORRECTNESS_r*.json records rather than a hand-kept list."""
+"""Driver-window rotation tests: the registry fronts never-green / stalest
+oracle-backed queries, computed from the CORRECTNESS_r*.json records rather
+than a hand-kept list, with ties broken by name."""
 
 from __future__ import annotations
 
@@ -9,48 +9,18 @@ import pytest
 from ndl_core_data_pipeline_spark import contract
 
 
-def test_force_front_names_exist():
-    reg = contract.build_registry()
-    assert {n for n, _ in contract._FORCE_FRONT} <= set(reg.queries)
-
-
-def test_pins_self_release_on_fresh_green():
-    """r11 regression: a pin whose query already earned a driver-green row
-    in a round >= the pin round must be inert — keeping it active puts a
-    fresh-green query ahead of genuinely stale ones and broke the
-    staleness-monotonicity assert across the r11→r12 driver boundary."""
-    # synthetic last-green maps exercise both sides of the release boundary
-    assert contract._active_pins({"quality_constraint_report": 11}) == []
-    assert contract._active_pins({"quality_constraint_report": 12}) == []
-    assert contract._active_pins({"quality_constraint_report": 10}) == [
-        "quality_constraint_report"
-    ]
-    assert contract._active_pins({}) == ["quality_constraint_report"]
-    # and against the REAL committed records: CORRECTNESS_r11.json holds the
-    # green row that releases the r11 pin, so no pin is active today
-    assert contract._active_pins() == []
-
-
-def test_forced_lead_then_stalest():
+def test_oracle_backed_lead_then_stalest():
     reg = contract.build_registry()
     names = list(reg.queries)
-    active = contract._active_pins()
-    n_forced = len(active)
-    assert names[:n_forced] == active
     last = contract._last_green_rounds()
-    # after the forced block, oracle-backed queries come before oracle-less
-    # ones, and each block is non-decreasing in last-green round
-    tail = names[n_forced:]
-    backed = [n for n in tail if n in reg.oracles]
-    bare = [n for n in tail if n not in reg.oracles]
-    assert tail == backed + bare
-    def effective(n):
-        # _DEFER_NEW queries sort as if last-green in round 2 (see contract)
-        g = last.get(n, 0)
-        return max(g, 2) if n in contract._DEFER_NEW else g
-
-    ranks = [effective(n) for n in backed]
-    assert ranks == sorted(ranks)
+    # oracle-backed queries come before oracle-less ones, and each block is
+    # non-decreasing in (last-green round, name)
+    backed = [n for n in names if n in reg.oracles]
+    bare = [n for n in names if n not in reg.oracles]
+    assert names == backed + bare
+    for block in (backed, bare):
+        ranks = [(last.get(n, 0), n) for n in block]
+        assert ranks == sorted(ranks)
 
 
 def test_driver_window_is_all_oracle_backed():
@@ -60,17 +30,11 @@ def test_driver_window_is_all_oracle_backed():
     names = list(reg.queries)
     window = names[:50]
     assert all(n in reg.oracles for n in window)
-    # and the window is exactly the 50 stalest oracle-backed queries by
-    # EFFECTIVE staleness (deferred-new queries rank as round-2 green)
+    # and the window is exactly the 50 stalest oracle-backed queries
     last = contract._last_green_rounds()
     backed = [n for n in names if n in reg.oracles]
-
-    def effective(n):
-        g = last.get(n, 0)
-        return max(g, 2) if n in contract._DEFER_NEW else g
-
-    worst_in_window = max(effective(n) for n in window)
-    best_outside = min(effective(n) for n in backed[50:])
+    worst_in_window = max(last.get(n, 0) for n in window)
+    best_outside = min(last.get(n, 0) for n in backed[50:])
     assert worst_in_window <= best_outside
 
 
@@ -89,17 +53,17 @@ def test_no_query_starves_while_greens_recycle():
 
 
 def test_steady_state_window_is_exactly_the_50_stalest():
-    """VERDICT r8 item 3: once the never-checked backlog is empty and no
-    pins are active, the 50-slot driver window must be exactly the 50
-    stalest oracle-backed queries. The rotation silently mis-allocated
-    slots twice (r6 defer list, r7 stale pins); this pins the steady
-    state structurally so a stray pin or starved query fails loudly."""
+    """VERDICT r8 item 3: once the never-checked backlog is empty, the
+    50-slot driver window must be exactly the 50 stalest oracle-backed
+    queries. The rotation silently mis-allocated slots twice (r6 defer
+    list, r7 stale pins); this pins the steady state structurally so a
+    starved query fails loudly."""
     reg = contract.build_registry()
     last = contract._last_green_rounds()
     backed = [n for n in reg.queries if n in reg.oracles]
     never_checked = [n for n in backed if last.get(n, 0) == 0]
-    if contract._active_pins() or contract._DEFER_NEW or never_checked:
-        pytest.skip("not steady state: pins or never-checked queries present")
+    if never_checked:
+        pytest.skip("not steady state: never-checked queries present")
     window = backed[:50]
     boundary = max(last[n] for n in window)
     # every query strictly staler than the window boundary holds a slot
@@ -136,3 +100,42 @@ def test_every_query_name_documented():
     docs = (root / "SURVEY.md").read_text() + (root / "COVERAGE.md").read_text()
     missing = [n for n in contract.queries() if n not in docs]
     assert not missing, f"undocumented queries: {missing}"
+
+
+def test_one_register_per_operator_module():
+    """Registration has one mechanism: every operator module defines a
+    single ``register(reg)``, and ``build_registry`` calls it from one loop
+    over one tuple naming every operator module."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(contract.__file__).resolve().parent
+    modules = sorted(
+        p.stem for p in (pkg / "operators").glob("*.py") if not p.stem.startswith("_")
+    )
+    for name in modules:
+        tree = ast.parse((pkg / "operators" / f"{name}.py").read_text())
+        regs = [
+            n.name
+            for n in tree.body
+            if isinstance(n, ast.FunctionDef) and n.name.startswith("register")
+        ]
+        assert regs == ["register"], f"{name}: {regs}"
+
+    tree = ast.parse((pkg / "contract.py").read_text())
+    (build,) = [
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "build_registry"
+    ]
+    loops = [n for n in ast.walk(build) if isinstance(n, ast.For)]
+    assert len(loops) == 1
+    (loop,) = loops
+    assert isinstance(loop.iter, ast.Tuple)
+    assert sorted(e.id for e in loop.iter.elts) == modules
+    register_calls = [
+        n
+        for n in ast.walk(build)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr.startswith("register")
+    ]
+    assert len(register_calls) == 1 and register_calls[0] in ast.walk(loop)

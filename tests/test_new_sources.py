@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import zipfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from ndl_core_data_pipeline_spark.sources.fixedwidth import (
@@ -350,6 +351,43 @@ def test_scan_handles_mixed_case_extensions(spark, tmp_path):
     assert any(r["archive"].endswith("Data.Zip") for r in zrows)
     mrows = scan_markdown(spark, str(d)).collect()
     assert any(r["path"].endswith("Read.Md") for r in mrows)
+
+
+@pytest.mark.parametrize(
+    "scanner, col, own",
+    [
+        ("pdfs.scan_pdfs", "path", {"A.PDF"}),
+        ("docx.scan_docx", "path", {"b.Docx"}),
+        ("markdown.scan_markdown", "path", {"c.MARKDOWN", "d.mD"}),
+        ("spreadsheet.scan_workbooks", "path", {"e.XLSX", "f.Ods"}),
+        ("archives.scan_zip_tables", "archive", {"g.ZIP"}),
+    ],
+)
+def test_scanners_list_only_their_extensions_in_any_case(
+    spark, tmp_path, scanner, col, own
+):
+    """Every file scanner lists its own extensions in any letter case and
+    skips the other scanners' files in the same directory."""
+    import importlib
+
+    from .test_pdf import _mini_pdf
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "A.PDF").write_bytes(_mini_pdf([b"hello"]))
+    _make_docx(d / "b.Docx")
+    (d / "c.MARKDOWN").write_text("# long")
+    (d / "d.mD").write_text("short")
+    (d / "e.XLSX").write_bytes(b"PK\x03\x04 not a workbook")
+    (d / "f.Ods").write_bytes(b"PK\x03\x04 not a workbook")
+    _make_zip(d / "g.ZIP", {"t.csv": "x\n1\n"})
+    (d / "h.pdf.txt").write_text("decoy: extension is the LAST suffix")
+    mod, fn = scanner.split(".")
+    scan = getattr(
+        importlib.import_module(f"ndl_core_data_pipeline_spark.sources.{mod}"), fn
+    )
+    got = {r[col].split("/")[-1] for r in scan(spark, str(d)).collect()}
+    assert got == own
 
 
 def test_fixed_width_custom_regex_special_pad(spark, tmp_path):

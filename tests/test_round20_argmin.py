@@ -20,10 +20,10 @@ from pyspark.sql import functions as F
 from ndl_core_data_pipeline_spark.operators import vector as V
 
 
-def _rows_nullsafe_equal(df_a, df_b, key):
+def _rows_nullsafe_equal(df_a, df_b, key, tag=""):
     a = {r[key]: tuple(r) for r in df_a.collect()}
     b = {r[key]: tuple(r) for r in df_b.collect()}
-    assert set(a) == set(b)
+    assert set(a) == set(b), tag
     bad = []
     for k in a:
         ta, tb = a[k], b[k]
@@ -43,7 +43,7 @@ def _rows_nullsafe_equal(df_a, df_b, key):
             if not same:
                 bad.append((k, ta, tb))
                 break
-    assert not bad, f"mismatches: {bad[:5]}"
+    assert not bad, f"{tag} mismatches: {bad[:5]}"
 
 
 VEC = [float(i) * 0.25 for i in range(64)]
@@ -98,13 +98,12 @@ def test_nearest_arrow_matches_hof_on_hostile_inputs(spark):
         new = V._nearest_arrow(
             hdf,
             cents,
-            keep=[("vec_id", "bigint")],
+            keep=("vec_id",),
             v_name="v",
-            v_sql_type="array<double>",
             id_sql_type="bigint",
             with_d2=True,
         ).select("vec_id", "cell_id", "d2")
-        _rows_nullsafe_equal(old, new, "vec_id"), tag
+        _rows_nullsafe_equal(old, new, "vec_id", tag)
 
 
 def test_nearest_arrow_matches_hof_on_real_embeddings(spark, sf_small):
@@ -119,9 +118,8 @@ def test_nearest_arrow_matches_hof_on_real_embeddings(spark, sf_small):
     new = V._nearest_arrow(
         emb.filter(F.col("vec_id").isNotNull()),
         cents,
-        keep=[("vec_id", "bigint")],
+        keep=("vec_id",),
         v_name="v",
-        v_sql_type="array<double>",
         id_sql_type="bigint",
         with_d2=True,
     ).select("vec_id", "cell_id", "d2")
@@ -213,7 +211,7 @@ def test_pq_encode_arrow_matches_hof_on_hostile_inputs(spark):
     for tag, cw in cw_sets.items():
         old = _hof_encode(hdf, cw, with_d2=True)
         new = V._pq_encode_arrow(
-            hdf, cw, keep=[("vec_id", "bigint")], v_name="v", with_d2=True
+            hdf, cw, keep=("vec_id",), v_name="v", with_d2=True
         )
         a = {(r["vec_id"], r["m"]): (r["code"], r["d2"]) for r in old.collect()}
         b = {(r["vec_id"], r["m"]): (r["code"], r["d2"]) for r in new.collect()}
@@ -276,7 +274,7 @@ def test_lsh_bands_arrow_matches_sql_hof(spark):
         "vec_id", V._lsh_signature("v", planes).alias("s")
     )
     new_sig = V._lsh_bands_arrow(
-        hdf, planes, 1, keep=[("vec_id", "bigint")], v_name="v"
+        hdf, planes, 1, keep=("vec_id",), v_name="v"
     ).select("vec_id", F.col("bvals")[0].alias("s"))
     a = {r["vec_id"]: r["s"] for r in old_sig.collect()}
     b = {r["vec_id"]: r["s"] for r in new_sig.collect()}
@@ -289,7 +287,7 @@ def test_lsh_bands_arrow_matches_sql_hof(spark):
         ).alias("bk"),
     ).select("vec_id", "bk.band", "bk.bval")
     new_b = V._lsh_bands_arrow(
-        hdf, planes, V.LSH_SIG_BANDS, keep=[("vec_id", "bigint")], v_name="v"
+        hdf, planes, V.LSH_SIG_BANDS, keep=("vec_id",), v_name="v"
     ).select("vec_id", F.posexplode("bvals").alias("band", "bval"))
     a = {(r["vec_id"], r["band"]): r["bval"] for r in old_b.collect()}
     b = {(r["vec_id"], r["band"]): r["bval"] for r in new_b.collect()}
@@ -336,7 +334,7 @@ def test_cos_verify_arrow_matches_hof(spark):
     new = {
         (r["vec_a"], r["vec_b"]): r["cos_raw"]
         for r in V._cos_verify_arrow(
-            pdf, keep=[("vec_a", "bigint"), ("vec_b", "bigint")]
+            pdf, keep=("vec_a", "vec_b")
         ).collect()
     }
     assert set(old) == set(new)
