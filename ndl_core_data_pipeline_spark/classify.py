@@ -17,6 +17,7 @@ top-3 via per-document sort of a THEMES-length array — no shuffle at all.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import math
 import re
 
@@ -62,6 +63,30 @@ def featurize(text: str) -> np.ndarray:
     return v / n if n else v
 
 
+def _bucket(tok: str) -> int:
+    return int.from_bytes(hashlib.md5(tok.encode()).digest()[:4], "big") % DIM
+
+
+def featurize_batch(texts: list[str | None]) -> np.ndarray:
+    """`featurize` for a whole batch, bit-identical row for row: each
+    distinct token of the batch is hashed once, and one bincount over
+    row * DIM + bucket builds every count. The counts are integers, so
+    the norms and quotients equal featurize's exactly. The token →
+    bucket map lives only for this call. Returns (len(texts), DIM)."""
+    n = len(texts)
+    per_row = [_TOKEN_RE.findall((t or "").lower()) for t in texts]
+    toks = list(itertools.chain.from_iterable(per_row))
+    bucket_of = {tok: _bucket(tok) for tok in set(toks)}
+    buckets = np.fromiter(map(bucket_of.__getitem__, toks), np.int64, len(toks))
+    lengths = np.fromiter(map(len, per_row), np.int64, n)
+    rows = np.repeat(np.arange(n, dtype=np.int64), lengths)
+    v = np.bincount(rows * DIM + buckets, minlength=n * DIM).astype(np.float64)
+    v = v.reshape(n, DIM)
+    norms = np.sqrt((v * v).sum(axis=1))[:, None]
+    np.divide(v, norms, out=v, where=norms > 0)
+    return v
+
+
 _ST_MODEL = None
 _ST_TRIED = False
 
@@ -88,13 +113,13 @@ def embed_texts(texts: list[str]) -> np.ndarray:
     model = _sentence_transformer()
     if model is not None:
         return np.asarray(model.encode(texts))
-    return np.stack([featurize(t) for t in texts])
+    return featurize_batch(texts)
 
 
 def theme_matrix(themes: dict[str, str] | None = None) -> tuple[list[str], np.ndarray]:
     themes = themes or EU_THEMES
     labels = list(themes)
-    return labels, np.stack([featurize(t) for t in themes.values()])
+    return labels, featurize_batch(list(themes.values()))
 
 
 def classify_themes(
@@ -112,7 +137,7 @@ def classify_themes(
 
     @pandas_udf(ArrayType(StringType()))
     def predict(texts: pd.Series) -> pd.Series:
-        docs = np.stack([featurize((t or "")[:2500]) for t in texts])
+        docs = featurize_batch([(t or "")[:2500] for t in texts])
         sims = docs @ mat.T  # both sides L2-normalized → cosine
         out = []
         for row in sims:

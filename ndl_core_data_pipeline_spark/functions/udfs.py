@@ -1,6 +1,7 @@
-"""Model-backed scalar functions as Arrow-batched pandas UDFs, each with a
-deterministic fallback tier so the pipeline runs (and the oracle can check
-the fallback) in environments without the optional model libraries.
+"""Model-backed scalar functions and the Arrow-batched UDFs that run them,
+each with a deterministic fallback tier so the pipeline runs (and the
+oracle can check the fallback) in environments without the optional model
+libraries.
 
 Reference operators covered:
 - X5 token count (resources/token_counter.py:12-37: tiktoken
@@ -16,21 +17,25 @@ Reference operators covered:
 - S6 HTML text extraction (resources/convertors/html_extractor.py:55-162:
   bs4 tier; regex strip fallback)
 
-Every UDF initializes its model once per executor process (module-level
-lazy singleton) and processes Arrow batches — the distributed analog of
-the reference's own batching (anonymizer.py:47-59, classifier batch 64).
+Every model and optional library is loaded, or found absent, once per
+executor process (module-level lazy singletons), and the UDFs process
+Arrow batches — the distributed analog of the reference's own batching
+(anonymizer.py:47-59, classifier batch 64). `canonical_text_udf` is the
+one kernel of the canonicalize step: markup sniff + HTML extraction,
+language detection and token count in a single hand-off per batch.
 """
 
 from __future__ import annotations
 
+import importlib
 import re
-from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, StringType
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 # ---------------------------------------------------------------- helpers
 
@@ -43,6 +48,21 @@ SEPARATORS = ("\n\n", "\n", " ", "")
 _TOKEN_FALLBACK_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
 EMAIL_RE = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
 UK_PHONE_RE = re.compile(r"(\+44[ -]?7\d{3}|07\d{3})[ -]?\d{3}[ -]?\d{3}")
+
+_OPTIONAL: dict[str, object] = {}
+
+
+def _optional(name: str):
+    """The optional library `name`, imported once per process; None when
+    it is absent, so a missing library costs one failed import, not one
+    per row."""
+    if name not in _OPTIONAL:
+        try:
+            _OPTIONAL[name] = importlib.import_module(name)
+        except ImportError:
+            _OPTIONAL[name] = None
+    return _OPTIONAL[name]
+
 
 _ENCODER = None
 _ENCODER_TRIED = False
@@ -74,30 +94,18 @@ def count_tokens(text: str | None) -> int:
     return len(_TOKEN_FALLBACK_RE.findall(text))
 
 
-@pandas_udf(IntegerType())
-def token_count_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(count_tokens).astype("int32")
-
-
-_LANGDETECT_READY = False
-
-
 def detect_language(text: str | None, fallback: str | None = None) -> str:
     """X6: langdetect (seeded) for len>200, else metadata fallback, else
     'en'; stopword heuristic when langdetect is unavailable."""
-    global _LANGDETECT_READY
     if text and len(text) > LANGDETECT_MIN_CHARS:
-        try:
-            from langdetect import DetectorFactory, detect
-
-            if not _LANGDETECT_READY:
-                DetectorFactory.seed = 0  # reference pins the seed
-                _LANGDETECT_READY = True
+        langdetect = _optional("langdetect")
+        if langdetect is not None:
+            langdetect.DetectorFactory.seed = 0  # reference pins the seed
             try:
-                return detect(text)
+                return langdetect.detect(text)
             except Exception:
                 pass
-        except ImportError:
+        else:
             low = text.lower()
             scores = {
                 "en": sum(low.count(f" {w} ") for w in ("the", "and", "of", "to")),
@@ -109,13 +117,6 @@ def detect_language(text: str | None, fallback: str | None = None) -> str:
             if scores[best] > 0:
                 return best
     return fallback or "en"
-
-
-@pandas_udf(StringType())
-def detect_language_udf(texts: pd.Series, fallbacks: pd.Series) -> pd.Series:
-    return pd.Series(
-        [detect_language(t, f) for t, f in zip(texts, fallbacks)], dtype="object"
-    )
 
 
 _PRESIDIO = None
@@ -225,11 +226,6 @@ def chunk_text(text: str | None) -> list[str]:
     return chunks
 
 
-@pandas_udf(ArrayType(StringType()))
-def chunk_text_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(chunk_text)
-
-
 # ----------------------------------------------------------- html extract
 
 _TAG_RE = re.compile(r"<(script|style|noscript)\b.*?</\1>", re.S | re.I)
@@ -247,20 +243,19 @@ def extract_html_text(html: str | None) -> str | None:
     boundaries become newlines, whitespace normalized."""
     if html is None:
         return None
-    try:
-        from bs4 import BeautifulSoup, Comment
-
-        soup = BeautifulSoup(html, "html.parser")
+    bs4 = _optional("bs4")
+    if bs4 is not None:
+        soup = bs4.BeautifulSoup(html, "html.parser")
         for t in soup(["script", "style", "noscript"]):
             t.decompose()
-        for c in soup.find_all(string=lambda s: isinstance(s, Comment)):
+        for c in soup.find_all(string=lambda s: isinstance(s, bs4.Comment)):
             c.extract()
         for a in soup.find_all("a", href=True):
             a.append(f" ({a['href']})")
         for li in soup.find_all("li"):
             li.insert(0, "- ")
         text = soup.get_text(separator="\n")
-    except ImportError:
+    else:
         import html as html_mod
 
         s = _TAG_RE.sub(" ", html)
@@ -283,9 +278,34 @@ def extract_html_text(html: str | None) -> str | None:
     return "\n".join(out).strip()
 
 
-@pandas_udf(StringType())
-def extract_html_text_udf(htmls: pd.Series) -> pd.Series:
-    return htmls.map(extract_html_text)
+CANONICAL_TEXT_TYPE = StructType(
+    [
+        StructField("text", StringType()),
+        StructField("language", StringType()),
+        StructField("token_count", IntegerType()),
+    ]
+)
+
+
+@arrow_udf(CANONICAL_TEXT_TYPE)
+def canonical_text_udf(texts: pa.Array, fallbacks: pa.Array) -> pa.Array:
+    """The canonicalize kernel, one pass per Arrow batch: a text that
+    holds both '<' and '>' is residual HTML (assets/processing/
+    assets.py:196-197) and is re-extracted; the language and the token
+    count are taken from the resulting text. `text` is the extracted
+    text, or null when the row had no markup (the input text stands)."""
+    plain, langs, counts = [], [], []
+    for t, fallback in zip(texts.to_pylist(), fallbacks.to_pylist()):
+        x = extract_html_text(t) if t and "<" in t and ">" in t else None
+        cur = t if x is None else x
+        plain.append(x)
+        langs.append(detect_language(cur, fallback))
+        counts.append(count_tokens(cur))
+    return pa.StructArray.from_arrays(
+        [pa.array(plain, pa.string()), pa.array(langs, pa.string()),
+         pa.array(counts, pa.int32())],
+        names=["text", "language", "token_count"],
+    )
 
 
 # ------------------------------------------------------------ pdf extract
@@ -295,13 +315,10 @@ PDF_OCR_THRESHOLD = 200  # resources/convertors/pdf_extractor.py:12
 
 def _pdf_ocr(payload: bytes) -> str:
     """OCR tier (pdf_extractor.py:15-53: pdf2image + pytesseract). The
-    rasterizer/OCR libs are not in this container; absent them this
-    returns '' and the short text layer stands."""
-    try:
-        import pdf2image  # noqa: F401
-        import pytesseract
-        from PIL import Image  # noqa: F401
-    except ImportError:
+    rasterizer/OCR libs are optional; absent them this returns '' and the
+    short text layer stands."""
+    pdf2image, pytesseract = _optional("pdf2image"), _optional("pytesseract")
+    if pdf2image is None or pytesseract is None or _optional("PIL") is None:
         return ""
     import tempfile
 
@@ -317,15 +334,14 @@ def extract_pdf_text(payload: bytes, ocr_threshold: int = PDF_OCR_THRESHOLD) -> 
     Tiers: PyMuPDF when importable → pure-Python content-stream parser.
     When the text layer yields fewer than `ocr_threshold` chars the OCR
     tier is consulted and appended when longer (pdf_extractor.py:94-98)."""
-    try:
-        import fitz  # PyMuPDF
-
+    fitz = _optional("fitz")  # PyMuPDF
+    if fitz is not None:
         doc = fitz.open(stream=payload, filetype="pdf")
         try:
             text = "\n".join(page.get_text("text") for page in doc).strip()
         finally:
             doc.close()
-    except ImportError:
+    else:
         from .pdf import pdf_text
 
         text = pdf_text(payload).strip()

@@ -515,7 +515,7 @@ def text_embed_hash(spark, sf_dir):
 
     Scale shape: explode → one keyed shuffle on (doc_id, bucket) with
     map-side partial sums, then a window co-keyed on doc_id. No Python,
-    no all-pairs; the model tier (classify.embed_texts via mapInPandas)
+    no all-pairs; the model tier (classify.embed_texts via rag.embed_chunks)
     plugs into the same downstream schema when sentence-transformers
     is importable (reference assets/rag/process_text_chunks.py:62-68).
     """

@@ -23,12 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .functions.udfs import (
-    anonymize_text_udf,
-    detect_language_udf,
-    extract_html_text_udf,
-    token_count_udf,
-)
+from .functions.udfs import anonymize_text_udf, canonical_text_udf
 from .operators.textops import LICENSE_DEFAULT, LICENSE_MAP
 from .schema import (
     CANONICAL_SCHEMA,
@@ -39,6 +34,7 @@ from .schema import (
 )
 
 _RAW_LICENSE_KEY = "license"  # the canonical builder reads this exact key
+_KERNEL_COL = "__canonical_text"
 
 
 def normalize_license(col: Column) -> Column:
@@ -78,21 +74,22 @@ def canonicalize(raw: DataFrame, parse_ts=None) -> DataFrame:
         if extra_cols
         else F.lit("{}")
     )
-    text = F.coalesce(get("text"), F.lit(""))
-    # embedded-markup sniff (assets/processing/assets.py:196-197): when the
-    # converted text still contains both '<' and '>', it is residual HTML —
-    # re-extract before language detection and the word/token counts.
-    # The UDF call must wrap the condition, not sit under it: Catalyst
-    # extracts Python UDFs out of CASE WHEN into an unconditional
-    # ArrowEvalPython node, so `when(cond, udf(text))` would ship EVERY
-    # row through the Python worker. Feeding the UDF a nulled input keeps
-    # non-markup rows on the None fast path inside the batch.
-    has_markup = text.contains("<") & text.contains(">")
-    text = F.coalesce(extract_html_text_udf(F.when(has_markup, text)), text)
+    raw_text = F.coalesce(get("text"), F.lit(""))
+    # One Python hand-off per batch: the kernel sniffs embedded markup
+    # (assets/processing/assets.py:196-197), re-extracts it, and takes
+    # language and token count from the resulting text. It is added as
+    # its own column first so every field below reads one evaluation.
+    # Its `text` is null for rows without markup; coalescing with the
+    # non-null input keeps `text` (and so `word_count`) non-nullable.
+    staged = raw.withColumn(
+        _KERNEL_COL, canonical_text_udf(raw_text, get("language"))
+    )
+    kernel = F.col(_KERNEL_COL)
+    text = F.coalesce(kernel["text"], raw_text)
     word_count = F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
         F.regexp_count(text, F.lit(r"\S+"))
     )
-    return raw.select(
+    return staged.select(
         F.coalesce(get("identifier"), F.uuid()).alias("identifier"),
         get("title").alias("title"),
         get("description").alias("description"),
@@ -106,11 +103,11 @@ def canonicalize(raw: DataFrame, parse_ts=None) -> DataFrame:
             if "tags" in cols
             else F.lit(None).cast("array<string>")
         ).alias("tags"),
-        detect_language_udf(text, get("language")).alias("language"),
+        kernel["language"].alias("language"),
         F.coalesce(get("format"), F.lit("text")).alias("format"),
         text.alias("text"),
         word_count.cast("int").alias("word_count"),
-        token_count_udf(text).alias("token_count"),
+        kernel["token_count"].alias("token_count"),
         get("data_file").alias("data_file"),
         extra.alias("extra_metadata"),
     )
@@ -143,8 +140,9 @@ def filter_supported(df: DataFrame) -> DataFrame:
 def anonymize(df: DataFrame) -> DataFrame:
     """P2 (resources/refine/anonymizer.py:47-71): anonymize text rows only,
     pass the rest through untouched."""
-    # null-feed form for the same reason as the canonicalize markup sniff:
-    # a UDF under CASE WHEN is hoisted and evaluated for all rows
+    # null-feed form: Catalyst hoists a Python UDF out of CASE WHEN into an
+    # unconditional ArrowEvalPython node, so `when(mask, udf(text))` would
+    # still ship every row; a nulled input keeps the rest on the None path
     mask = (F.col("format") == "text") & F.col("text").isNotNull()
     return df.withColumn(
         "text",

@@ -1,12 +1,17 @@
 """Model-tier plumbing: presidio engines must be constructed once per
-process (module-level lazy singletons), never per row."""
+process (module-level lazy singletons), never per row, and an absent
+optional library is looked for once per process, not once per call."""
 
 from __future__ import annotations
 
+import importlib.abc
 import sys
 import types
 
+import pytest
+
 from ndl_core_data_pipeline_spark.functions import udfs
+from tests.test_pdf import _mini_pdf
 
 
 def test_presidio_engines_built_once(monkeypatch):
@@ -99,7 +104,7 @@ def test_langdetect_tier_seeded(monkeypatch):
     mod.DetectorFactory = FakeFactory
     mod.detect = fake_detect
     monkeypatch.setitem(sys.modules, "langdetect", mod)
-    monkeypatch.setattr(udfs, "_LANGDETECT_READY", False)
+    monkeypatch.setattr(udfs, "_OPTIONAL", {})  # probe the fake afresh
     long_text = "word " * 60  # > 200 chars
     assert udfs.detect_language(long_text) == "xx"
     assert FakeFactory.seed == 0  # reference pins the seed
@@ -131,3 +136,41 @@ def test_tiktoken_tier(monkeypatch):
         assert udfs.count_tokens("one two three") == 3
     assert fake_calls["for_model"] == 1  # encoder cached
     assert udfs.count_tokens(None) == 0 and udfs.count_tokens("") == 0
+
+
+class _CountingBlocker(importlib.abc.MetaPathFinder):
+    """Makes the named modules unimportable and counts every attempt."""
+
+    def __init__(self, names):
+        self.names = set(names)
+        self.attempts = dict.fromkeys(self.names, 0)
+
+    def find_spec(self, fullname, path=None, target=None):
+        if fullname in self.names:
+            self.attempts[fullname] += 1
+            raise ModuleNotFoundError(f"No module named {fullname!r}", name=fullname)
+        return None
+
+
+_PDF = _mini_pdf([b"tiny"])
+
+
+@pytest.mark.parametrize(
+    "module, call",
+    [
+        ("langdetect", lambda: udfs.detect_language("word " * 60)),
+        ("bs4", lambda: udfs.extract_html_text("<p>a <b>b</b></p>")),
+        ("fitz", lambda: udfs.extract_pdf_text(_PDF)),
+        ("pdf2image", lambda: udfs._pdf_ocr(b"%PDF-1.4")),
+    ],
+)
+def test_absent_library_probed_once(monkeypatch, module, call):
+    blocker = _CountingBlocker([module])
+    for name in list(sys.modules):
+        if name == module or name.startswith(module + "."):
+            monkeypatch.delitem(sys.modules, name)
+    monkeypatch.setattr(sys, "meta_path", [blocker, *sys.meta_path])
+    monkeypatch.setattr(udfs, "_OPTIONAL", {})
+    for _ in range(100):
+        call()
+    assert blocker.attempts[module] == 1
