@@ -817,3 +817,38 @@ def rebalance_narrow_scan(df, spark):
     if n >= target:
         return df
     return df.repartition(target)
+
+
+def arrow_map(df, fn, *, keep, adds: str):
+    """The package's one `mapInArrow` boundary. The output is the `keep`
+    columns, their types read from df's schema (a bigint `label` stays
+    bigint), followed by the `adds` fields, declared once as DDL.
+
+    `fn(batch)` returns `(rows, values)`. `rows` is None when output row
+    i is input row i; otherwise it is the input row index of every output
+    row (a kernel that explodes rows repeats an index), and the `keep`
+    columns are gathered at it. `values` holds one column per added
+    field: a `pa.Array` of the declared type passes through untouched,
+    anything else becomes an array of that type."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DataType
+
+    types = dict(df.dtypes)
+    added = DataType.fromDDL(adds).fields
+    arrow_types = [to_arrow_type(f.dataType) for f in added]
+    names = [*keep, *(f.name for f in added)]
+
+    def run(batches):
+        for b in batches:
+            rows, values = fn(b)
+            cols = [b.column(k) for k in keep]
+            if rows is not None:
+                cols = [c.take(rows) for c in cols]
+            cols += [
+                v if isinstance(v, pa.Array) else pa.array(v, type=t)
+                for v, t in zip(values, arrow_types, strict=True)
+            ]
+            yield pa.RecordBatch.from_arrays(cols, names)
+
+    return df.mapInArrow(run, ", ".join([f"{k} {types[k]}" for k in keep] + [adds]))

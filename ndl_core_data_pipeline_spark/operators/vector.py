@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W, functions as F
 
 from ..io import load
+from ._util import arrow_map
 
 
 def _dot(a, b):
@@ -243,11 +244,9 @@ def lsh_bucket_assignment(spark, sf_dir):
     algorithm, same role: prune the candidate space)."""
     emb = load(spark, sf_dir, "embeddings")
     planes = hyperplane_matrix(LSH_SIG_BITS, embedding_dim(emb))
-    # r20 (guide §4.2): the 16 dot-product folds per row run as one
-    # Arrow/numpy pass (_lsh_bands_arrow with a single band of width 16
-    # — band 0's value IS the full signature); the SQL-HOF form
-    # (_lsh_signature) stays as the reference the equivalence tests pin
-    # against. Plan: plans/r20/vector_lsh_buckets_{before,after}.txt.
+    # one band of width 16: band 0's value IS the full signature. The
+    # SQL-HOF form (_lsh_signature) stays as the reference the
+    # equivalence tests pin against.
     out = _lsh_bands_arrow(
         emb.select("vec_id", "label", "embedding"),
         planes,
@@ -311,10 +310,9 @@ def ivf_cell_assignments(spark, sf_dir, cents=None):
     differ from the vector's own label; that disagreement is the
     quantizer doing its job.
 
-    r20 (guide §4.2): the interpreted HOF argmin over the broadcast
-    centroid row is replaced by the Arrow-native argmin against the
-    driver-collected K-row centroid table (_nearest_arrow — bit-exact
-    fold + comparator, see its block comment). `cents` may be passed as
+    The argmin runs against the driver-collected K-row centroid table
+    (_nearest_arrow — bit-exact fold + comparator, see its block
+    comment). `cents` may be passed as
     the (cell_id, centroid) DataFrame (ivf_topk / ann_recall share the
     centroid build); it is collected here — K rows, the same table the
     former plan broadcast. The groupBy(vec_id) stays — it is what
@@ -358,10 +356,9 @@ def ivf_topk(spark, sf_dir):
     an equi-join on vec_id (co-partitioned), never a cross join (reference
     ANN analog: LanceDB IVF-PQ, create_lancedb_index.py:143-148)."""
     emb = load(spark, sf_dir, "embeddings")
-    # r20: the K×dim centroid table is computed ONCE and collected (the
+    # the K×dim centroid table is computed ONCE and collected (the
     # assignment consumer needs the driver rows for the Arrow argmin
-    # anyway); the probe reads the same rows as a K-row local relation —
-    # replaces the r19 .cache() shared-subtree cut
+    # anyway); the probe reads the same rows as a K-row local relation
     cent_rows = [
         (r["cell_id"], r["centroid"]) for r in _centroid_arrays(emb).collect()
     ]
@@ -505,9 +502,6 @@ def embedding_cosine_near_dup(spark, sf_dir):
     cand = tasks.mapInPandas(gram, f"label {label_t}, vec_a BIGINT, vec_b BIGINT")
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    # r20 (guide §4.2): the exact re-verify runs as one Arrow pass (same
-    # helper as the LSH form — exact fold order, quotient + HALF_UP
-    # rounding in the JVM)
     verified = _cos_verify_arrow(
         cand.join(a, "vec_a").join(b, "vec_b").select(
             "label", "vec_a", "vec_b", "emb_a", "emb_b"
@@ -561,20 +555,33 @@ def _band_value_structs(emb_sql: str, planes, n_bands: int):
     return out
 
 
-def _ddl(df, *names):
-    """`name type` DDL fields for columns of `df`, each type read from
-    df's schema — pass-through columns of the Arrow kernels keep their
-    input types (a bigint `label` stays bigint)."""
-    types = dict(df.dtypes)
-    return [f"{nm} {types[nm]}" for nm in names]
+def _dense_rows(col, dim: int):
+    """(clean, M) for an Arrow list column: clean[i] is True where row i
+    is non-NULL, holds no NULL element and has exactly `dim` elements —
+    the rows whose JVM fold is a plain float64 left fold — and M is the
+    (clean rows × dim) float64 matrix of those rows, in row order. The
+    kernels send every other row down their exact per-row scalar path."""
+    import numpy as np
+
+    offs = col.offsets.to_numpy(zero_copy_only=False)
+    vals = col.values
+    n_null = np.concatenate([[0], np.cumsum(np.asarray(vals.is_null()))])
+    clean = (
+        np.asarray(col.is_valid())
+        & (offs[1:] - offs[:-1] == dim)
+        & (n_null[offs[1:]] == n_null[offs[:-1]])
+    )
+    gather = offs[:-1][clean][:, None] + np.arange(dim)[None, :]
+    M = vals.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)[gather]
+    return clean, M
 
 
 def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
-    """Per-row LSH band values as ONE Arrow pass (guide §4.2), appending
-    `bvals` (array<bigint>, one value per band) — replaces n_planes
-    interpreted zip_with/aggregate dot-product folds per row.
+    """Per-row LSH band values as ONE Arrow pass, appending `bvals`
+    (array<bigint>, one value per band) — replaces n_planes interpreted
+    zip_with/aggregate dot-product folds per row.
 
-    Exactness contract (pinned in tests/test_round20_argmin.py):
+    Exactness contract (pinned in tests/test_vector_kernels.py):
     - each plane's dot is the left fold of CAST(x AS DOUBLE) * hv — the
       accumulation loop preserves the fold order, so finite/NaN/Inf
       arithmetic is bit-identical to the JVM HOF;
@@ -590,54 +597,23 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
     bits, dim = H.shape
     w = bits // n_bands
 
-    def bands(batches):
+    def bands(b):
         import pyarrow as pa
 
-        for b in batches:
-            n = b.num_rows
-            vcol = b.column(b.schema.get_field_index(v_name))
-            if isinstance(vcol, pa.ChunkedArray):  # pragma: no cover
-                vcol = vcol.combine_chunks()
-            offs = vcol.offsets.to_numpy(zero_copy_only=False)
-            rlens = offs[1:] - offs[:-1]
-            row_null = np.asarray(vcol.is_null())
-            vals = vcol.values
-            el_null = np.asarray(vals.is_null()) if len(vals) else np.zeros(0, bool)
-            cum = np.concatenate([[0], np.cumsum(el_null)])
-            any_el_null = (cum[offs[1:]] - cum[offs[:-1]]) > 0
-            clean = (~row_null) & (rlens == dim) & (~any_el_null)
-            bv = np.zeros((n, n_bands), dtype=np.int64)
-            idx = np.nonzero(clean)[0]
-            if len(idx):
-                starts = offs[:-1][idx]
-                gather = starts[:, None] + np.arange(dim)[None, :]
-                M = vals.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[gather]
-                acc = np.zeros((len(idx), bits))
-                for i in range(dim):  # exact left-fold order per plane
-                    acc = acc + M[:, i : i + 1] * H[:, i][None, :]
-                # Spark comparison semantics: NaN is GREATER than every
-                # value, so a NaN dot sets its bit (numpy's NaN > 0 is
-                # False — pinned by test_lsh_bands_arrow_matches_sql_hof)
-                bitvals = ((acc > 0) | np.isnan(acc)).astype(np.int64)
-                for bnd in range(n_bands):
-                    v = np.zeros(len(idx), dtype=np.int64)
-                    for k in range(w):
-                        v += bitvals[:, bnd * w + k] << k
-                    bv[idx, bnd] = v
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm in keep]
-            names = list(keep)
-            arrays.append(vcol)
-            names.append(v_name)
-            arrays.append(
-                pa.array(bv.tolist(), type=pa.list_(pa.int64()))
-            )
-            names.append("bvals")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+        clean, M = _dense_rows(b.column(v_name), dim)
+        acc = np.zeros((len(M), bits))
+        for i in range(dim):  # exact left-fold order per plane
+            acc = acc + M[:, i : i + 1] * H[:, i][None, :]
+        # Spark comparison semantics: NaN is GREATER than every value, so
+        # a NaN dot sets its bit (numpy's NaN > 0 is False — pinned by
+        # test_lsh_bands_arrow_matches_sql_hof)
+        bit = ((acc > 0) | np.isnan(acc)).astype(np.int64)[:, : n_bands * w]
+        bv = np.zeros((b.num_rows, n_bands), dtype=np.int64)
+        bv[clean] = (bit.reshape(-1, n_bands, w) << np.arange(w)).sum(axis=2)
+        offsets = pa.array(np.arange(b.num_rows + 1, dtype=np.int32) * n_bands)
+        return None, [pa.ListArray.from_arrays(offsets, pa.array(bv.reshape(-1)))]
 
-    schema = ", ".join(_ddl(df, *keep, v_name) + ["bvals array<bigint>"])
-    return df.mapInArrow(bands, schema)
+    return arrow_map(df, bands, keep=(*keep, v_name), adds="bvals array<bigint>")
 
 
 def _fold_dot(a, b):
@@ -653,85 +629,50 @@ def _fold_dot(a, b):
     return acc
 
 
-def _cos_verify_arrow(df, *, a_name="emb_a", b_name="emb_b", keep, dim=64):
+def _cos_verify_arrow(df, *, a_name="emb_a", b_name="emb_b", keep):
     """Exact cosine FOLDS for candidate pairs as ONE Arrow pass: appends
     dot, sa (=sum a_i^2) and sb with every fold in the exact sequential
-    order of _dot/_norm (guide §4.2 — replaces three interpreted HOF
-    folds per surviving pair). The quotient dot/(sqrt(sa)*sqrt(sb)) and
-    the HALF_UP rounding stay in the JVM, so division semantics —
-    including the session's ANSI divide-by-zero error on a zero-norm
-    vector — are exactly the old expression's. Rows whose vectors are
-    NULL, hold NULL elements, or differ from `dim` take the exact
-    per-row scalar path (equal non-dim lengths still produce finite
-    folds, exactly like zip_with)."""
+    order of _dot/_norm (replaces three interpreted HOF folds per
+    surviving pair). The quotient dot/(sqrt(sa)*sqrt(sb)) and the
+    HALF_UP rounding stay in the JVM, so division semantics — including
+    the session's ANSI divide-by-zero error on a zero-norm vector — are
+    exactly the old expression's. A batch takes its width from its most
+    common `a` vector length, so one ragged row cannot push the rest off
+    the vectorized path; rows whose vectors are NULL, hold NULL
+    elements, or have another length take the exact per-row scalar path
+    (equal lengths of any width still produce finite folds, exactly like
+    zip_with)."""
 
-    def verify(batches):
+    def verify(b):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        for b in batches:
-            n = b.num_rows
+        ca, cb = b.column(a_name), b.column(b_name)
+        widths = pc.list_value_length(ca).drop_null().to_numpy()
+        dim = int(np.bincount(widths).argmax()) if len(widths) else 0
+        clean_a, A = _dense_rows(ca, dim)
+        clean_b, B = _dense_rows(cb, dim)
+        clean = clean_a & clean_b
+        A, B = A[clean[clean_a]], B[clean[clean_b]]
+        d = sa = sb = np.zeros(len(A))
+        for i in range(dim):  # exact left-fold order
+            d = d + A[:, i] * B[:, i]
+            sa = sa + A[:, i] * A[:, i]
+            sb = sb + B[:, i] * B[:, i]
+        folds = np.zeros((3, b.num_rows))
+        folds[:, clean] = (d, sa, sb)
+        null = np.zeros((3, b.num_rows), dtype=bool)
+        for ri in np.flatnonzero(~clean):
+            a_py, b_py = ca[int(ri)].as_py(), cb[int(ri)].as_py()
+            for k, v in enumerate(
+                (_fold_dot(a_py, b_py), _fold_dot(a_py, a_py), _fold_dot(b_py, b_py))
+            ):
+                null[k, ri] = v is None
+                folds[k, ri] = 0.0 if v is None else v
+        return None, [pa.array(folds[k], mask=null[k]) for k in range(3)]
 
-            def col_info(name):
-                c = b.column(b.schema.get_field_index(name))
-                if isinstance(c, pa.ChunkedArray):  # pragma: no cover
-                    c = c.combine_chunks()
-                offs = c.offsets.to_numpy(zero_copy_only=False)
-                rl = offs[1:] - offs[:-1]
-                rn = np.asarray(c.is_null())
-                vv = c.values
-                en = np.asarray(vv.is_null()) if len(vv) else np.zeros(0, bool)
-                cm = np.concatenate([[0], np.cumsum(en)])
-                anyn = (cm[offs[1:]] - cm[offs[:-1]]) > 0
-                return c, offs, (~rn) & (rl == dim) & (~anyn)
-
-            ca, offa, cleana = col_info(a_name)
-            cb, offb, cleanb = col_info(b_name)
-            clean = cleana & cleanb
-            dot_o = [None] * n
-            sa_o = [None] * n
-            sb_o = [None] * n
-            idx = np.nonzero(clean)[0]
-            if len(idx):
-                ga = offa[:-1][idx][:, None] + np.arange(dim)[None, :]
-                gb = offb[:-1][idx][:, None] + np.arange(dim)[None, :]
-                A = ca.values.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[ga]
-                B = cb.values.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[gb]
-                d = np.zeros(len(idx))
-                sa = np.zeros(len(idx))
-                sb = np.zeros(len(idx))
-                for i in range(dim):  # exact left-fold order
-                    d = d + A[:, i] * B[:, i]
-                    sa = sa + A[:, i] * A[:, i]
-                    sb = sb + B[:, i] * B[:, i]
-                for t, ri in enumerate(idx):
-                    ri = int(ri)
-                    dot_o[ri] = float(d[t])
-                    sa_o[ri] = float(sa[t])
-                    sb_o[ri] = float(sb[t])
-            for ri in np.nonzero(~clean)[0]:
-                ri = int(ri)
-                a_py = ca[ri].as_py()
-                b_py = cb[ri].as_py()
-                dot_o[ri] = _fold_dot(a_py, b_py)
-                sa_o[ri] = _fold_dot(a_py, a_py)
-                sb_o[ri] = _fold_dot(b_py, b_py)
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm in keep]
-            names = list(keep)
-            arrays.append(pa.array(dot_o, type=pa.float64()))
-            names.append("dot")
-            arrays.append(pa.array(sa_o, type=pa.float64()))
-            names.append("sa")
-            arrays.append(pa.array(sb_o, type=pa.float64()))
-            names.append("sb")
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    schema = ", ".join(_ddl(df, *keep) + ["dot double", "sa double", "sb double"])
-    out = df.mapInArrow(verify, schema)
+    out = arrow_map(df, verify, keep=keep, adds="dot double, sa double, sb double")
     return out.withColumn(
         "cos_raw", F.col("dot") / (F.sqrt("sa") * F.sqrt("sb"))
     ).drop("dot", "sa", "sb")
@@ -775,10 +716,8 @@ def lsh_near_dup_pairs(
     # but can never emit a pair — NULL cosine fails the verify — and a
     # None inside a packed bucket would crash np.array: exclude them
     emb = emb.filter(F.col("embedding").isNotNull() & F.col("vec_id").isNotNull())
-    # r20 (guide §4.2): band values from ONE Arrow pass, exploded JVM-
-    # side (posexplode index == the former struct's band literal); the
-    # SQL-HOF band form (_band_value_structs) stays as the test
-    # reference. Bit-exactness: _lsh_bands_arrow block comment.
+    # band values exploded JVM-side: the posexplode index is the band
+    # number _band_value_structs (the test reference) carries
     banded = _lsh_bands_arrow(
         emb.select("vec_id", "embedding"),
         planes,
@@ -833,10 +772,6 @@ def lsh_near_dup_pairs(
     )
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    # r20 (guide §4.2): the exact verify — three interpreted HOF folds
-    # per candidate, the pipeline's dominant cost once tiles prune the
-    # collisions — runs as one Arrow pass (_cos_verify_arrow, exact
-    # fold order); HALF_UP rounding stays in the JVM.
     verified = _cos_verify_arrow(
         pair_ids.join(a, "vec_a").join(b, "vec_b").select(
             "vec_a", "vec_b", "emb_a", "emb_b"
@@ -1197,20 +1132,15 @@ def _pq_scored(emb):
 
 def pq_codes(spark, sf_dir):
     """PQ encode: each vector compresses to M one-byte-ish codes — the
-    argmin codeword per subquantizer (ties to the smallest code). The
-    keyed struct-min collapses the K-way expansion map-side (same plan
-    shape as `ivf_cell_assignments`); at 100 TB the output is M small
-    ints per vector, a ~32× compression of a 64-dim float vector.
+    argmin codeword per subquantizer (ties to the smallest code). At
+    100 TB the output is M small ints per vector, a ~32× compression of
+    a 64-dim float vector.
     Reference ANN analog: LanceDB IVF-PQ (create_lancedb_index.py:143-148)
     — this is the PQ half, the IVF half is `vector_ivf_assignments`.
 
-    r20 (guide §4.2): the encode is ONE Arrow pass — slice + M×K
-    distance math + argmin vectorized in numpy against the
-    driver-collected codebook (_pq_encode_arrow; the collect replaces
-    the r19 eager checkpoint as the codebook materialization). The r19
-    broadcast join + interpreted HOF argmin (and before that the K-way
-    expansion + keyed shuffle) are gone. Plan:
-    plans/r20/vector_pq_codes_{before,after}.txt."""
+    The encode is ONE Arrow pass against the driver-collected codebook
+    (_pq_encode_arrow): slice + M×K distance math + argmin vectorized in
+    numpy. A code is a label, so it keeps the label's type."""
     emb = _pq_filtered(load(spark, sf_dir, "embeddings"))
     cw = _collect_codebook(_pq_codebooks(emb))
     enc = _pq_encode_arrow(
@@ -1218,6 +1148,7 @@ def pq_codes(spark, sf_dir):
         cw,
         keep=("vec_id",),
         v_name="embedding",
+        id_sql_type=dict(emb.dtypes)["label"],
         with_d2=True,
     )
     return enc.select(
@@ -1238,26 +1169,24 @@ def pq_adc_topk(spark, sf_dir):
     this is the memory-bound ANN scan shape: codes table + broadcast LUT,
     no float vectors in the hot loop.
 
-    r20 (guide §4.2): the DATABASE encode is ONE Arrow pass — slice +
-    M×K distance math + argmin vectorized in numpy against the
-    driver-collected codebook (_pq_encode_arrow; the collect replaces
-    the r19 eager checkpoint as the codebook materialization; vec 0 is
-    dropped BEFORE the opaque pass because mapInArrow blocks predicate
-    pushdown). Only the 1-vector QUERY side still expands K ways (M×K
-    tiny rows) because the LUT needs every codeword distance, not the
-    argmin. Plan: plans/r20/vector_pq_adc_topk_{before,after}.txt."""
+    The DATABASE encode is ONE Arrow pass against the driver-collected
+    codebook (_pq_encode_arrow). vec 0 is dropped BEFORE that pass
+    because mapInArrow blocks predicate pushdown. Only the 1-vector
+    QUERY side still expands K ways (M×K tiny rows) because the LUT
+    needs every codeword distance, not the argmin."""
     emb = _pq_filtered(load(spark, sf_dir, "embeddings"))
-    cb = _pq_codebooks(emb)
-    cw = _collect_codebook(cb)
+    code_t = dict(emb.dtypes)["label"]
+    cw = _collect_codebook(_pq_codebooks(emb))
     codes = _pq_encode_arrow(
         emb.filter(F.col("vec_id") != 0).select("vec_id", "label", "embedding"),
         cw,
         keep=("vec_id", "label"),
         v_name="embedding",
+        id_sql_type=code_t,
     )
     cb_df = spark.createDataFrame(
         [(m, code, sc_) for m, rows in sorted(cw.items()) for code, sc_ in rows],
-        "m INT, code INT, subcent ARRAY<DOUBLE>",
+        f"m INT, code {code_t}, subcent ARRAY<DOUBLE>",
     )
     lut = (
         _subvectors(emb.filter(F.col("vec_id") == 0))
@@ -1283,17 +1212,16 @@ KMEANS_ITERS = 2
 _KM_DEC = "decimal(27,10)"  # exact partial sums for unit-magnitude dims
 
 
-# --------- r20: Arrow-native nearest-centroid argmin (guide §4.2) ---------
+# ------------- Arrow-native nearest-centroid argmin -------------
 #
-# The map-side argmin (r19's _argmin_cell) evaluates interpreted
+# The map-side argmin in SQL (_argmin_cell) evaluates interpreted
 # higher-order functions per row: transform(cs, ...) × zip_with ×
 # aggregate is ~1.5k boxed lambda evaluations per vector (~70 µs/row at
 # sf1 — THE per-row cost of every kmeans/IVF/PQ corpus pass). Codegen
 # cannot help: an unrolled K×dim argmin is a single expression, Janino
 # fails it with "Code grows beyond 64 KB" and the whole stage falls back
-# to interpreted eval (measured; see OPTIMIZATION_r20.md). The fix is
-# guide §4.2 — hand whole Arrow batches to numpy — with the JVM
-# semantics reproduced EXACTLY:
+# to interpreted eval (measured; see OPTIMIZATION_r20.md). So whole
+# Arrow batches go to numpy, with the JVM semantics reproduced EXACTLY:
 #
 # d2 semantics of aggregate(zip_with(v, c, (x,y)->(x-y)*(x-y)), 0.0, +):
 #   zip_with pads the shorter side with NULL and the left fold sticks at
@@ -1307,7 +1235,7 @@ _KM_DEC = "decimal(27,10)"  # exact partial sums for unit-magnitude dims
 #   NaN greatest among non-NULLs (probed: array_min(struct(NULL,5),
 #   struct(1.0,3)) -> the NULL struct). d2 is a sum of squares, so -0.0
 #   can never arise; cell ids are unique per cents row, so ties resolve
-#   by id (NULL id first). tests/test_round20_argmin.py pins every one
+#   by id (NULL id first). tests/test_vector_kernels.py pins every one
 #   of these cases against the HOF form.
 
 
@@ -1358,127 +1286,81 @@ def _argmin_scalar(v, cents):
     return best
 
 
+def _argmin_fold(M, C):
+    """Vectorized exact argmin of every row of M over the rows of C (both
+    clean and of one width, C non-empty and in comparator id order).
+    Returns (index into C, d2) per row of M. d2 is the left fold above
+    and the comparison the non-NULL half of _d2_key — NaN greatest — so
+    the strict `better` keeps the first id on ties, like _argmin_scalar."""
+    import numpy as np
+
+    best_j = np.zeros(len(M), dtype=np.int64)
+    best = None
+    for j, c in enumerate(C):
+        sq = M - c[None, :]
+        sq = sq * sq
+        acc = np.zeros(len(M))
+        for i in range(M.shape[1]):  # exact left-fold order
+            acc = acc + sq[:, i]
+        if best is None:
+            best = acc
+            continue
+        better = (acc < best) | (np.isnan(best) & ~np.isnan(acc))
+        best_j[better] = j
+        best = np.where(better, acc, best)
+    return best_j, best
+
+
 def _nearest_arrow(df, cents, *, keep, v_name, id_sql_type, with_d2=False,
                    out_id="cell_id"):
-    """Append the nearest-centroid id (and optionally its d2) per row via
-    one numpy pass over Arrow batches — replaces the interpreted HOF
-    argmin + the crossJoin/broadcast of the centroid row (guide §4.2 /
-    §2.4). `cents` is the driver-held [(id, centroid), ...] list (K rows
-    — the same table the former plan broadcast). `keep` names the
-    passthrough columns; only keep + v cross the Python
-    boundary (guide §4.1). Bit-exactness argument + hostile-case pins:
-    block comment above / tests/test_round20_argmin.py."""
-    cents = list(cents)
-    lens = {len(c) for _, c in cents if c is not None}
-    uniform_dim = (
-        lens.pop()
-        if len(lens) == 1 and not any(c is None for _, c in cents)
-        else None
-    )
-    clean_cells = (
-        [(cid, c) for cid, c in cents if _vec_clean(c, uniform_dim)]
-        if uniform_dim
-        else []
-    )
+    """Append the nearest-centroid id (typed `id_sql_type`, and
+    optionally its d2) per row via one numpy pass over Arrow batches —
+    replaces the interpreted HOF argmin + the crossJoin/broadcast of the
+    centroid row. `cents` is the driver-held [(id, centroid), ...] list
+    (K rows — the same table the former plan broadcast). Only `keep` and
+    the vector cross the Python boundary, and they pass through.
+    Bit-exactness argument + hostile-case pins: block comment above /
+    tests/test_vector_kernels.py."""
+    import numpy as np
+
+    cents = sorted(cents, key=lambda rc: _id_key(rc[0]))
+    dim = len(cents[0][1]) if cents and cents[0][1] is not None else 0
     # the vectorized path only runs when EVERY cell is clean and
     # same-length; any hostile cell (NULL array, NULL element, ragged
     # length) sends every row through the exact scalar path instead
-    all_clean = bool(cents) and len(clean_cells) == len(cents)
-    # pre-sort clean cells in comparator id order: iterating with a
-    # strict < keeps the smallest id on d2 ties
-    clean_sorted = sorted(clean_cells, key=lambda rc: _id_key(rc[0]))
-    id_py = [cid for cid, _ in clean_sorted]
-    cents_all = cents
+    fast = bool(cents) and all(_vec_clean(c, dim) for _, c in cents)
+    ids = np.array([cid for cid, _ in cents], dtype=object)
+    C = np.array([c for _, c in cents], dtype=np.float64) if fast else None
 
-    def assign(batches):
-        import numpy as np
-        import pyarrow as pa
+    def assign(b):
+        vcol = b.column(v_name)
+        clean = np.zeros(b.num_rows, dtype=bool)
+        cell = np.full(b.num_rows, None, dtype=object)
+        d2 = np.full(b.num_rows, None, dtype=object)
+        if fast:
+            clean, M = _dense_rows(vcol, dim)
+            j, best = _argmin_fold(M, C)
+            cell[clean], d2[clean] = ids[j], best
+        for ri in np.flatnonzero(~clean):  # exact per-row authority path
+            hit = _argmin_scalar(vcol[int(ri)].as_py(), cents)
+            if hit is not None:
+                cell[ri], d2[ri] = hit
+        return None, [cell, d2][: 1 + with_d2]
 
-        C = (
-            np.array([c for _, c in clean_sorted], dtype=np.float64)
-            if clean_sorted
-            else None
-        )
-        dim = uniform_dim or 0
-        for b in batches:
-            n = b.num_rows
-            vcol = b.column(b.schema.get_field_index(v_name))
-            if isinstance(vcol, pa.ChunkedArray):  # pragma: no cover
-                vcol = vcol.combine_chunks()
-            offs = vcol.offsets.to_numpy(zero_copy_only=False)
-            rlens = offs[1:] - offs[:-1]
-            row_null = np.asarray(vcol.is_null())
-            vals = vcol.values
-            el_null = np.asarray(vals.is_null()) if len(vals) else np.zeros(0, bool)
-            cum = np.concatenate([[0], np.cumsum(el_null)])
-            any_el_null = (cum[offs[1:]] - cum[offs[:-1]]) > 0
-            fast = (~row_null) & (rlens == dim) & (~any_el_null) if all_clean else np.zeros(n, bool)
-            cell_out = [None] * n
-            d2_out = [None] * n
-            if all_clean and C is not None and fast.any():
-                idx = np.nonzero(fast)[0]
-                starts = offs[:-1][idx]
-                gather = starts[:, None] + np.arange(dim)[None, :]
-                M = vals.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[gather]
-                best_k1 = best_k2 = best_j = best_d2 = None
-                for j in range(len(clean_sorted)):
-                    diff = M - C[j][None, :]
-                    sq = diff * diff
-                    acc = np.zeros(len(idx))
-                    for i in range(dim):  # exact left-fold order
-                        acc = acc + sq[:, i]
-                    k1 = np.where(np.isnan(acc), 2, 1)
-                    k2 = np.where(np.isnan(acc), 0.0, acc)
-                    if best_k1 is None:
-                        best_k1, best_k2 = k1, k2
-                        best_j = np.zeros(len(idx), dtype=np.int64)
-                        best_d2 = acc
-                    else:
-                        better = (k1 < best_k1) | ((k1 == best_k1) & (k2 < best_k2))
-                        best_k1 = np.where(better, k1, best_k1)
-                        best_k2 = np.where(better, k2, best_k2)
-                        best_j = np.where(better, j, best_j)
-                        best_d2 = np.where(better, acc, best_d2)
-                for t, ri in enumerate(idx):
-                    cell_out[ri] = id_py[int(best_j[t])]
-                    d2_out[ri] = float(best_d2[t])
-            for ri in np.nonzero(~fast)[0]:  # exact per-row authority path
-                hit = _argmin_scalar(vcol[int(ri)].as_py(), cents_all)
-                if hit is not None:
-                    cell_out[int(ri)] = hit[0]
-                    d2_out[int(ri)] = hit[1]
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm in keep]
-            names = list(keep)
-            arrays.append(vcol)
-            names.append(v_name)
-            arrays.append(
-                pa.array(cell_out, type=pa.int64() if id_sql_type == "bigint" else pa.int32())
-            )
-            names.append(out_id)
-            if with_d2:
-                arrays.append(pa.array(d2_out, type=pa.float64()))
-                names.append("d2")
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    schema = ", ".join(
-        _ddl(df, *keep, v_name)
-        + [f"{out_id} {id_sql_type}"]
-        + (["d2 double"] if with_d2 else [])
-    )
-    return df.mapInArrow(assign, schema)
+    adds = f"{out_id} {id_sql_type}" + (", d2 double" if with_d2 else "")
+    return arrow_map(df, assign, keep=(*keep, v_name), adds=adds)
 
 
-def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
+def _pq_encode_arrow(df, cw, *, keep, v_name, id_sql_type, with_d2=False):
     """PQ encode as ONE Arrow pass: per input vector emit one row per
-    live subquantizer m with the argmin codeword (and optionally its
-    d2). Replaces the _subvectors/_slice_subs explode + broadcast join
-    on m + interpreted HOF argmin (guide §4.2 — the M×K×subdim distance
-    math runs vectorized in numpy; §2.3 — only `keep` + the vector cross
-    the Python boundary, and the M-way row expansion happens after it).
+    live subquantizer m with the argmin codeword `code` (typed
+    `id_sql_type`, the codebook's label type) and optionally its d2.
+    Replaces the _subvectors/_slice_subs explode + broadcast join on m +
+    interpreted HOF argmin: the M×K×subdim distance math runs vectorized
+    in numpy, only `keep` + the vector cross the Python boundary, and
+    the M-way row expansion happens after it.
 
-    Exact-equivalence contract (pinned in tests/test_round20_argmin.py):
+    Exact-equivalence contract (pinned in tests/test_vector_kernels.py):
     - the JVM form explodes ALL m in 0..PQ_M-1 and the inner join drops
       m values absent from the codebook -> emit only m in sorted(cw);
     - subvec = slice(v, m*8+1, 8): shorter/empty past the vector's end,
@@ -1488,142 +1370,41 @@ def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
       argmin comparator is array_min over struct(d2, code): NULL-first,
       NaN-greatest, code tiebreak (same probed ordering as the cells).
     `cw` is {m: [(code, subcent), ...]} — the driver-held codebook."""
+    import numpy as np
+
     ms = sorted(cw)
-    cw_sorted = {
-        m: sorted(cw[m], key=lambda rc: _id_key(rc[0])) for m in ms
-    }
-    fast_m = {
-        m: all(_vec_clean(sc_, PQ_SUBDIM) for _, sc_ in rows) and bool(rows)
-        for m, rows in cw_sorted.items()
-    }
-    all_fast = all(fast_m.values()) and bool(ms)
-    dim = PQ_M * PQ_SUBDIM
-
-    def _encode_row(v):
-        out = []
-        for m in ms:
-            if v is None:
-                sub = None
-            else:
-                lo = m * PQ_SUBDIM
-                sub = list(v[lo : lo + PQ_SUBDIM])
-                sub = [None if x is None else float(x) for x in sub]
-            best = _argmin_scalar(sub, cw_sorted[m])
-            out.append((m, best[0] if best else None, best[1] if best else None))
-        return out
-
-    def encode(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        CW = (
-            {
-                m: np.array([sc_ for _, sc_ in rows], dtype=np.float64)
-                for m, rows in cw_sorted.items()
-            }
-            if all_fast
-            else {}
-        )
-        code_py = {m: [c for c, _ in rows] for m, rows in cw_sorted.items()}
-        for b in batches:
-            n = b.num_rows
-            vcol = b.column(b.schema.get_field_index(v_name))
-            if isinstance(vcol, pa.ChunkedArray):  # pragma: no cover
-                vcol = vcol.combine_chunks()
-            offs = vcol.offsets.to_numpy(zero_copy_only=False)
-            rlens = offs[1:] - offs[:-1]
-            row_null = np.asarray(vcol.is_null())
-            vals = vcol.values
-            el_null = np.asarray(vals.is_null()) if len(vals) else np.zeros(0, bool)
-            cum = np.concatenate([[0], np.cumsum(el_null)])
-            any_el_null = (cum[offs[1:]] - cum[offs[:-1]]) > 0
-            fast = (
-                (~row_null) & (rlens == dim) & (~any_el_null)
-                if all_fast
-                else np.zeros(n, bool)
-            )
-            # per-row outputs: list of (m, code, d2) triples
-            m_out: list = [None] * n
-            code_out: list = [None] * n
-            d2_out: list = [None] * n
-            idx = np.nonzero(fast)[0]
-            if len(idx):
-                starts = offs[:-1][idx]
-                gather = starts[:, None] + np.arange(dim)[None, :]
-                M = (
-                    vals.to_numpy(zero_copy_only=False)
-                    .astype(np.float64, copy=False)[gather]
-                    .reshape(len(idx), PQ_M, PQ_SUBDIM)
-                )
-                for m in ms:
-                    S = M[:, m, :]
-                    best_k1 = best_k2 = best_j = best_d2 = None
-                    for j in range(len(code_py[m])):
-                        diff = S - CW[m][j][None, :]
-                        sq = diff * diff
-                        acc = np.zeros(len(idx))
-                        for i in range(PQ_SUBDIM):  # exact left-fold order
-                            acc = acc + sq[:, i]
-                        k1 = np.where(np.isnan(acc), 2, 1)
-                        k2 = np.where(np.isnan(acc), 0.0, acc)
-                        if best_k1 is None:
-                            best_k1, best_k2 = k1, k2
-                            best_j = np.zeros(len(idx), dtype=np.int64)
-                            best_d2 = acc
-                        else:
-                            better = (k1 < best_k1) | (
-                                (k1 == best_k1) & (k2 < best_k2)
-                            )
-                            best_k1 = np.where(better, k1, best_k1)
-                            best_k2 = np.where(better, k2, best_k2)
-                            best_j = np.where(better, j, best_j)
-                            best_d2 = np.where(better, acc, best_d2)
-                    for t, ri in enumerate(idx):
-                        ri = int(ri)
-                        if m_out[ri] is None:
-                            m_out[ri], code_out[ri], d2_out[ri] = [], [], []
-                        m_out[ri].append(m)
-                        code_out[ri].append(code_py[m][int(best_j[t])])
-                        d2_out[ri].append(float(best_d2[t]))
-            for ri in np.nonzero(~fast)[0]:  # exact per-row authority path
-                ri = int(ri)
-                m_out[ri], code_out[ri], d2_out[ri] = [], [], []
-                for m, code, d2 in _encode_row(vcol[ri].as_py()):
-                    m_out[ri].append(m)
-                    code_out[ri].append(code)
-                    d2_out[ri].append(d2)
-            # explode: one output row per (input row, m)
-            reps = np.array([len(x) if x else 0 for x in m_out], dtype=np.int64)
-            take = np.repeat(np.arange(n), reps)
-            arrays = [
-                b.column(b.schema.get_field_index(nm)).take(pa.array(take))
-                for nm in keep
-            ]
-            names = list(keep)
-            arrays.append(
-                pa.array([m for row in m_out if row for m in row], type=pa.int32())
-            )
-            names.append("m")
-            arrays.append(
-                pa.array(
-                    [c for row in code_out if row for c in row], type=pa.int32()
-                )
-            )
-            names.append("code")
-            if with_d2:
-                arrays.append(
-                    pa.array(
-                        [d for row in d2_out if row for d in row],
-                        type=pa.float64(),
-                    )
-                )
-                names.append("d2")
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    schema = ", ".join(
-        _ddl(df, *keep) + ["m int", "code int"] + (["d2 double"] if with_d2 else [])
+    books = [sorted(cw[m], key=lambda rc: _id_key(rc[0])) for m in ms]
+    fast = bool(ms) and all(
+        rows and all(_vec_clean(sc_, PQ_SUBDIM) for _, sc_ in rows) for rows in books
     )
-    return df.mapInArrow(encode, schema)
+    codes = [np.array([c for c, _ in rows], dtype=object) for rows in books]
+    CW = [np.array([sc_ for _, sc_ in rows], np.float64) for rows in books] if fast else None
+    subs = [slice(m * PQ_SUBDIM, (m + 1) * PQ_SUBDIM) for m in ms]
+
+    def encode(b):
+        vcol = b.column(v_name)
+        n = b.num_rows
+        clean = np.zeros(n, dtype=bool)
+        code = np.full((n, len(ms)), None, dtype=object)
+        d2 = np.full((n, len(ms)), None, dtype=object)
+        if fast:
+            clean, M = _dense_rows(vcol, PQ_M * PQ_SUBDIM)
+            for t, sub in enumerate(subs):
+                j, best = _argmin_fold(M[:, sub], CW[t])
+                code[clean, t], d2[clean, t] = codes[t][j], best
+        for ri in np.flatnonzero(~clean):  # exact per-row authority path
+            v = vcol[int(ri)].as_py()
+            for t, sub in enumerate(subs):
+                hit = _argmin_scalar(None if v is None else v[sub], books[t])
+                if hit is not None:
+                    code[ri, t], d2[ri, t] = hit
+        # explode: one output row per (input row, m), m ascending
+        m_col = np.tile(np.array(ms, dtype=np.int32), n)
+        rows = np.repeat(np.arange(n), len(ms))
+        return rows, [m_col, code.ravel(), d2.ravel()][: 2 + with_d2]
+
+    adds = f"m int, code {id_sql_type}" + (", d2 double" if with_d2 else "")
+    return arrow_map(df, encode, keep=keep, adds=adds)
 
 
 def _collect_codebook(cb) -> dict:
@@ -1779,7 +1560,7 @@ def _kmeans_rows(emb, rounds: int = KMEANS_ITERS):
     by the algorithm constant, never by data size. Values round-trip
     bit-exactly (collect -> Python float -> repr literal is the IEEE
     shortest-roundtrip path), so the trained table is byte-identical to
-    the r19 plan's — pinned by tests/test_round20_argmin.py."""
+    the HOF broadcast-loop fit's — pinned by tests/test_vector_kernels.py."""
     seeds = emb.filter(F.col("vec_id") < KMEANS_K).select("vec_id", "v").collect()
     cents = [(r["vec_id"], r["v"]) for r in seeds]
     for _ in range(rounds):
@@ -1817,11 +1598,9 @@ def kmeans_centroids(spark, sf_dir):
     EXACT shared values in both engines. Oracle: the same iterations
     unrolled as SQL CTEs.
 
-    r20 (guide §4.2/§2.4): the first KMEANS_ITERS-1 rounds run as the
-    driver loop (_kmeans_rows); the LAST round's mean table — which IS
-    the query output (oracle CTE m{last}) — stays distributed, so the
-    output schema/derivation is unchanged. Plan evidence:
-    plans/r20/vector_kmeans_centroids_{before,after}.txt."""
+    The first KMEANS_ITERS-1 rounds run as the driver loop
+    (_kmeans_rows); the LAST round's mean table — which IS the query
+    output (oracle CTE m{last}) — stays distributed."""
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -1954,35 +1733,13 @@ def ivfpq_adc_search(spark, sf_dir):
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    # The trained centroid table feeds THREE consumers (assignment,
-    # residuals, query residuals) and the codebook two (encode, LUT);
-    # the localCheckpoints stop Spark re-executing those subtrees per
-    # consumer (A/B at sf0.1: 4.88 s -> 4.47 s — the fit runs once
-    # either way inside one job tree, so the win is modest but real,
-    # and both tables are K-rows / M*K-rows so the cut is free).
-    #
-    # r19 optimization (guide §2.4): the assignment/residual step used
-    # to crossJoin every vector with the K broadcast centroid rows (K×
-    # expansion), groupBy(vec_id)-argmin (shuffle), then JOIN the
-    # assignment back to emb by vec_id and the centroid by cell_id (two
-    # more exchanges carrying the full v arrays). The argmin depends
-    # only on (v, centroids), so it now runs in the scan projection via
-    # the broadcast array<struct<cell_id, centroid>> row
-    # (_argmin_cell with the centroid carried as an extra struct field
-    # — cell_id is unique per cs entry, so the widened struct never
-    # changes the (d2, cell_id) comparator's decision), and the
-    # residual zip_with reads the winning centroid straight out of the
-    # argmin struct. vec_id.isNotNull() reproduces the old equi-join's
-    # NULL-key drop. Plan evidence:
-    # plans/r19/vector_ivfpq_adc_search_{before,after}.txt.
-    # r20 (guide §4.2/§2.4): the coarse quantizer trains in the driver
-    # loop (_kmeans_rows — bounded K×dim state, one job per round); the
-    # final assignment is the Arrow argmin over the same K rows, and the
-    # winning centroid re-attaches as a folded literal lookup
-    # (_cent_lookup — same collected doubles, bit-identical residuals).
-    # This removes the per-round broadcast-exchange chain, the eager
-    # cents checkpoint, and the BNLJ guard plan of r19. Plan:
-    # plans/r20/vector_ivfpq_adc_search_{before,after}.txt.
+    # The coarse quantizer trains in the driver loop (_kmeans_rows —
+    # bounded K×dim state, one job per round). The final assignment is
+    # the Arrow argmin over the same K rows, in the scan with no join
+    # back to emb; the winning centroid re-attaches as a folded literal
+    # lookup (_cent_lookup — the same collected doubles, so residuals
+    # are bit-identical). vec_id.isNotNull() drops NULL ids the way an
+    # equi-join on vec_id would.
     cents_rows = _kmeans_rows(emb.select("vec_id", "v"))
     if not cents_rows:
         # the former size(cs) > 0 guard dropped every row when no cell
@@ -2010,7 +1767,7 @@ def ivfpq_adc_search(spark, sf_dir):
             lambda x, c: _round6_det(x - c),
         ).alias("r"),
     )
-    # r19 (guide §5/§8): resid feeds TWO corpus-scale consumers — the
+    # resid feeds TWO corpus-scale consumers — the
     # codebook build (rex) and the encode (subs) — and each re-ran the
     # whole scan + map-side argmin + residual zip_with. One
     # localCheckpoint makes the residual pass run once (the index-build
@@ -2021,12 +1778,10 @@ def ivfpq_adc_search(spark, sf_dir):
     # materialization job, the same lesson as the tfidf wtab demotion.
     resid = corpus_checkpoint(resid)
     rex = resid.select("label", F.posexplode("r").alias("pos", "val"))
-    # r20: collect the M×K×subdim codebook to the driver (same bounded
-    # table the r19 plan eagerly checkpointed + broadcast; the collect
-    # is the materialization job and also warms the lazy resid
-    # checkpoint). The second groupBy(m, code) collect_list pivot is
-    # gone — the array assembly happens in Python (guide §2.4: one
-    # exchange removed).
+    # the M×K×subdim codebook is collected to the driver: the collect is
+    # the materialization job and also warms the lazy resid checkpoint,
+    # and the arrays are assembled in Python instead of by a second
+    # groupBy(m, code) collect_list pivot (one exchange fewer)
     cb_flat = rex.groupBy(
         (F.col("pos") / PQ_SUBDIM).cast("int").alias("m"),
         F.col("label").alias("code"),
@@ -2048,16 +1803,15 @@ def ivfpq_adc_search(spark, sf_dir):
         ]
         for m, codes_ in cw.items()
     }
-    # r20 (guide §4.2): database encode is ONE Arrow pass — slice, M×K
-    # distance math and argmin run vectorized in numpy against the
-    # driver-held codebook (was: 8-way explode + broadcast join +
-    # interpreted HOF argmin). vec 0 is dropped BEFORE the opaque pass
-    # (mapInArrow blocks predicate pushdown — guide §4.1).
+    # vec 0 is dropped BEFORE the encode pass: mapInArrow blocks
+    # predicate pushdown. A code is a label, so it keeps the label's type.
+    code_t = dict(emb.dtypes)["label"]
     codes = _pq_encode_arrow(
         resid.filter(F.col("vec_id") != 0),
         cw,
         keep=("vec_id", "label", "cell_id"),
         v_name="r",
+        id_sql_type=code_t,
     )
     # the query-cell probe needs distances for vec 0 only: a 1×K
     # crossJoin against the K-row driver-built centroid table
@@ -2085,7 +1839,7 @@ def ivfpq_adc_search(spark, sf_dir):
     qsubs = _slice_subs(qres, "r", ("cell_id",))
     cb_df = spark.createDataFrame(
         [(m, code, sc_) for m, rows in sorted(cw.items()) for code, sc_ in rows],
-        "m INT, code INT, subcent ARRAY<DOUBLE>",
+        f"m INT, code {code_t}, subcent ARRAY<DOUBLE>",
     )
     lut = qsubs.join(F.broadcast(cb_df), "m").select(
         "cell_id",

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .listing import binary_files
+from .listing import binary_files, map_files
 
 ARCHIVE_CELLS_SCHEMA = (
     "archive string, member string, row_idx bigint, cells array<string>"
@@ -56,24 +56,18 @@ def _rows_from_zip(name: str, data: bytes):
                 yield member, -1, [f"{type(exc).__name__}: {exc}"]
 
 
+def _archive_rows(path: str, data: bytes, err: str | None) -> list[tuple]:
+    """map_files body: one archive's (archive, member, row_idx, cells)
+    rows; _rows_from_zip already isolates unreadable archives/members."""
+    if err:
+        return [(path, ERROR_MEMBER, -1, [err])]
+    return [(path, *row) for row in _rows_from_zip(path, data)]
+
+
 def scan_zip_tables(spark: SparkSession, path: str) -> DataFrame:
     """Distributed zip-of-CSVs scan → (archive, member, row_idx, cells)."""
-    import pandas as pd
-
     files = binary_files(spark, path, ("zip",))
-
-    def run(batches):
-        for pdf in batches:
-            out = {"archive": [], "member": [], "row_idx": [], "cells": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                for member, idx, cells in _rows_from_zip(fpath, bytes(content)):
-                    out["archive"].append(fpath)
-                    out["member"].append(member)
-                    out["row_idx"].append(idx)
-                    out["cells"].append(cells)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, ARCHIVE_CELLS_SCHEMA)
+    return map_files(files, _archive_rows, ARCHIVE_CELLS_SCHEMA)
 
 
 def scan_zip_tables_quarantined(

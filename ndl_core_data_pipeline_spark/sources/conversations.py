@@ -8,7 +8,7 @@ first-encounter order; segments join with the ' \\p ' separator
 :203-217, speaker list :236-246, separator :242-246).
 
 Spark shape: XML payloads arrive as rows (path, content) — e.g. from
-spark.read.format('binaryFile') — and parse inside mapInPandas with
+spark.read.format('binaryFile') — and parse inside map_files with
 stdlib xml.etree (one Python stage, no shuffle); the conversation
 GROUPING runs as the W4 window sessionization over the exploded
 utterances, so the stateful scan is per-document and scales with
@@ -18,11 +18,10 @@ documents, not with the corpus.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from .listing import map_files
 
 SEPARATOR = " \\p "  # parser.py:242-246 (literal backslash-p)
 
@@ -60,26 +59,22 @@ def parse_utterances(xml_payload: str, doc_path: str = "") -> list[dict]:
     return rows
 
 
+def _utterance_rows(path: str, data: bytes, err: str | None) -> list[tuple]:
+    """map_files body: one XML document's utterance rows. Malformed XML
+    yields none (parse_utterances); any other exception is not a fault
+    of the document, so it fails the task instead of dropping it."""
+    if err:
+        raise RuntimeError(f"{path}: {err}")
+    xml_payload = data.decode("utf-8", errors="replace")
+    return [tuple(r.values()) for r in parse_utterances(xml_payload, path)]
+
+
 def utterances_from_xml(files: DataFrame) -> DataFrame:
-    """(path, content) rows → utterance rows via mapInPandas (map-only)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for _, row in pdf.iterrows():
-                payload = row["content"]
-                if isinstance(payload, (bytes, bytearray)):
-                    payload = payload.decode("utf-8", errors="replace")
-                out.extend(parse_utterances(payload, row["path"]))
-            yield (
-                pd.DataFrame.from_records(out)
-                if out
-                else pd.DataFrame(
-                    columns=["doc_path", "seq", "utterance_type", "speaker", "text"]
-                )
-            )
-
-    return files.mapInPandas(run, UTTERANCE_SCHEMA)
+    """(path, content) rows → utterance rows via map_files (map-only).
+    `content` may be BINARY or STRING; a STRING is encoded as UTF-8 (a
+    no-op cast for BINARY), so both parse the same text."""
+    files = files.withColumn("content", F.col("content").cast("binary"))
+    return map_files(files, _utterance_rows, UTTERANCE_SCHEMA)
 
 
 def group_conversations(utterances: DataFrame) -> DataFrame:

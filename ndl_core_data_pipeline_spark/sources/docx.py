@@ -20,7 +20,7 @@ from xml.etree import ElementTree
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .listing import binary_files
+from .listing import binary_files, map_files
 
 _W_NS = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 
@@ -53,38 +53,14 @@ def extract_docx_text(data) -> str:
     return "\n".join(paragraphs)
 
 
+def _docx_rows(path: str, data: bytes, err: str | None) -> list[tuple]:
+    """map_files body: one document's DOCX_TEXT_SCHEMA row."""
+    text = "" if err else extract_docx_text(data)
+    n_paragraphs = len(text.split("\n")) if text else 0
+    return [(path, len(data), n_paragraphs, len(text), text, err)]
+
+
 def scan_docx(spark: SparkSession, path: str) -> DataFrame:
     """Distributed multi-DOCX text extraction: (path, n_bytes,
     n_paragraphs, n_chars, text, error) per document."""
-    import pandas as pd
-
-    files = binary_files(spark, path, ("docx",))
-
-    def run(batches):
-        for pdf in batches:
-            out = {
-                "path": [],
-                "n_bytes": [],
-                "n_paragraphs": [],
-                "n_chars": [],
-                "text": [],
-                "error": [],
-            }
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                out["path"].append(fpath)
-                out["n_bytes"].append(len(data))
-                try:
-                    text = extract_docx_text(data)
-                    err = None
-                except Exception as exc:  # noqa: BLE001 — per-file isolation
-                    text, err = "", f"{type(exc).__name__}: {exc}"
-                out["n_paragraphs"].append(
-                    len(text.split("\n")) if text else 0
-                )
-                out["n_chars"].append(len(text))
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, DOCX_TEXT_SCHEMA)
+    return map_files(binary_files(spark, path, ("docx",)), _docx_rows, DOCX_TEXT_SCHEMA)

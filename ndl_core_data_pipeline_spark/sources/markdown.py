@@ -23,7 +23,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .listing import binary_files
+from .listing import binary_files, map_files
 
 MD_TEXT_SCHEMA = (
     "path string, meta map<string,string>, n_chars bigint, "
@@ -82,28 +82,16 @@ def markdown_to_text(body: str) -> str:
     return out.strip()
 
 
+def _markdown_rows(path: str, data: bytes, err: str | None) -> list[tuple]:
+    """map_files body: one file's MD_TEXT_SCHEMA row (strict UTF-8)."""
+    if err:
+        return [(path, {}, 0, "", err)]
+    meta, body = split_front_matter(data.decode("utf-8", errors="strict"))
+    text = markdown_to_text(body)
+    return [(path, meta, len(text), text, None)]
+
+
 def scan_markdown(spark: SparkSession, path: str) -> DataFrame:
     """Distributed markdown scan: (path, meta, n_chars, text, error)."""
-    import pandas as pd
-
     files = binary_files(spark, path, ("md", "markdown"))
-
-    def run(batches):
-        for pdf in batches:
-            out = {"path": [], "meta": [], "n_chars": [], "text": [], "error": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                out["path"].append(fpath)
-                try:
-                    md = bytes(content).decode("utf-8", errors="strict")
-                    meta, body = split_front_matter(md)
-                    text = markdown_to_text(body)
-                    err = None
-                except Exception as exc:  # noqa: BLE001 — per-file isolation
-                    meta, text, err = {}, "", f"{type(exc).__name__}: {exc}"
-                out["meta"].append(meta)
-                out["n_chars"].append(len(text))
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, MD_TEXT_SCHEMA)
+    return map_files(files, _markdown_rows, MD_TEXT_SCHEMA)

@@ -15,37 +15,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .listing import binary_files
+from .listing import binary_files, map_files
 
 # text plus per-file outcome; a corrupt document yields an error row, not
 # a failed scan (same fault-isolation contract as spreadsheet.scan_workbooks)
 PDF_TEXT_SCHEMA = "path string, n_bytes bigint, n_chars bigint, text string, error string"
 
 
+def _pdf_rows(path: str, data: bytes, err: str | None) -> list[tuple]:
+    """map_files body: one document's (path, n_bytes, n_chars, text,
+    error) row."""
+    from ..functions.udfs import extract_pdf_text
+
+    text = "" if err else extract_pdf_text(data)
+    return [(path, len(data), len(text), text, err)]
+
+
 def scan_pdfs(spark: SparkSession, path: str) -> DataFrame:
     """Distributed multi-PDF text extraction: (path, n_bytes, n_chars,
     text, error) per document."""
-    import pandas as pd
-
-    files = binary_files(spark, path, ("pdf",))
-
-    def run(batches):
-        from ..functions.udfs import extract_pdf_text
-
-        for pdf in batches:
-            out = {"path": [], "n_bytes": [], "n_chars": [], "text": [], "error": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                out["path"].append(fpath)
-                out["n_bytes"].append(len(data))
-                try:
-                    text = extract_pdf_text(data)
-                    err = None
-                except Exception as exc:  # noqa: BLE001 — per-file isolation
-                    text, err = "", f"{type(exc).__name__}: {exc}"
-                out["n_chars"].append(len(text))
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, PDF_TEXT_SCHEMA)
+    return map_files(binary_files(spark, path, ("pdf",)), _pdf_rows, PDF_TEXT_SCHEMA)

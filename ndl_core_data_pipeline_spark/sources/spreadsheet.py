@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.infer import infer_and_cast
-from .listing import binary_files
+from .listing import binary_files, map_files
 
 FILE_READ_TIMEOUT_S = 60  # spreadsheet_to_parquet.py:43
 
@@ -82,6 +82,19 @@ WORKBOOK_CELLS_SCHEMA = (
 ERROR_SHEET = "__error__"
 
 
+def _workbook_rows(path: str, data: bytes, err: str | None) -> list[tuple]:
+    """map_files body: one workbook's cell-grid rows. An unreadable
+    workbook (BadZipFile, XML ParseError, missing content.xml, ...) is
+    one ERROR_SHEET row carrying the exception text."""
+    if err:
+        return [(path, ERROR_SHEET, -1, [err])]
+    return [
+        (path, sheet, i, row)
+        for sheet, rows in read_workbook_bytes(path, data).items()
+        for i, row in enumerate(rows)
+    ]
+
+
 def scan_workbooks(spark: SparkSession, path: str) -> DataFrame:
     """Distributed multi-workbook scan (the at-scale S4 shape): a
     binaryFile listing of .xlsx/.ods files fanned out one-task-per-file
@@ -94,35 +107,8 @@ def scan_workbooks(spark: SparkSession, path: str) -> DataFrame:
     distributes by file. Reference analog: one converter invocation per
     spreadsheet (resources/convertors/spreadsheet_to_parquet.py:108-187).
     """
-    import pandas as pd
-
     files = binary_files(spark, path, ("xlsx", "ods"))
-
-    def run(batches):
-        for pdf in batches:
-            out = {"path": [], "sheet": [], "row_idx": [], "cells": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                # per-file fault isolation: one corrupt/truncated workbook
-                # (BadZipFile, XML ParseError, missing content.xml, ...)
-                # must not fail a million-file scan after task retries —
-                # emit a sentinel row and keep going
-                try:
-                    sheets = read_workbook_bytes(fpath, bytes(content))
-                except Exception as exc:  # noqa: BLE001 — any parse failure
-                    out["path"].append(fpath)
-                    out["sheet"].append(ERROR_SHEET)
-                    out["row_idx"].append(-1)
-                    out["cells"].append([f"{type(exc).__name__}: {exc}"])
-                    continue
-                for sheet, rows in sheets.items():
-                    for i, row in enumerate(rows):
-                        out["path"].append(fpath)
-                        out["sheet"].append(sheet)
-                        out["row_idx"].append(i)
-                        out["cells"].append(row)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, WORKBOOK_CELLS_SCHEMA)
+    return map_files(files, _workbook_rows, WORKBOOK_CELLS_SCHEMA)
 
 
 def scan_workbooks_quarantined(

@@ -6,8 +6,10 @@ import pytest
 
 from ndl_core_data_pipeline_spark.sources.conversations import (
     SEPARATOR,
+    _utterance_rows,
     conversations_from_xml,
     parse_utterances,
+    utterances_from_xml,
 )
 from ndl_core_data_pipeline_spark.sources.spreadsheet import (
     read_workbook_sheets,
@@ -54,6 +56,40 @@ def test_conversations_multiple_docs_isolated(spark):
     out = conversations_from_xml(files).collect()
     assert len(out) == 4  # 2 conversations per doc, no cross-doc bleed
     assert {r["doc_path"] for r in out} == {"a.xml", "b.xml"}
+
+
+def test_conversations_string_content_matches_binary(spark):
+    """A STRING content column parses exactly like its UTF-8 bytes."""
+    xml = QA_XML.replace("Bob", "Bób")
+    as_bytes = spark.createDataFrame(
+        [("d1.xml", xml.encode())], "path STRING, content BINARY"
+    )
+    as_text = spark.createDataFrame([("d1.xml", xml)], "path STRING, content STRING")
+    got = utterances_from_xml(as_text).collect()
+    assert got == utterances_from_xml(as_bytes).collect()
+    assert [r["speaker"] for r in got][:2] == ["Alice", "Bób"]
+
+
+def test_utterance_rows_raise_on_non_xml_error():
+    """A parse failure other than malformed XML is not turned into an
+    empty document: the error call raises, failing the task."""
+    with pytest.raises(RuntimeError, match="d.xml: KeyError"):
+        _utterance_rows("d.xml", b"<a/>", "KeyError: 'x'")
+
+
+def test_map_files_raise_from_error_call_fails_task(spark):
+    """map_files isolates a file only when `parse` returns error rows;
+    a `parse` that raises again fails the task, as _utterance_rows does."""
+    from ndl_core_data_pipeline_spark.sources.listing import map_files
+
+    def parse(path, data, err):
+        if err:
+            raise RuntimeError(f"{path}: {err}")
+        raise KeyError("boom")
+
+    files = spark.createDataFrame([("d.xml", b"<a/>")], "path STRING, content BINARY")
+    with pytest.raises(Exception, match="d.xml: KeyError"):
+        map_files(files, parse, "doc_path STRING").collect()
 
 
 def test_sheet_name_sanitizer():

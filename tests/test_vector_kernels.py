@@ -1,20 +1,22 @@
-"""r20 focused pins: the Arrow-native nearest-centroid argmin
-(_nearest_arrow), the Arrow PQ encode (_pq_encode_arrow), and the
-driver-loop Lloyd fit (_kmeans_rows) must be BIT-IDENTICAL to the r19
-HOF/broadcast forms they replaced — including every hostile shape the
+"""Pins on the Arrow kernels in operators/vector.py: the nearest-centroid
+argmin (_nearest_arrow), the PQ encode (_pq_encode_arrow), the LSH bands
+(_lsh_bands_arrow), the cosine verify (_cos_verify_arrow) and the
+driver-loop Lloyd fit (_kmeans_rows) must be BIT-IDENTICAL to the JVM
+higher-order-function (HOF) forms — including every hostile shape the
 fixtures throw (NULL vectors, NULL elements, NaN/Inf values, ragged
 lengths, degenerate centroid tables).
 
-The r19 reference implementations (_argmin_cell over the broadcast
+The HOF reference implementations (_argmin_cell over the broadcast
 struct row, _argmin_code over the joined codeword arrays, the
-broadcast-loop _kmeans_fit) are kept in vector.py / re-built here
-exactly so the equivalence stays executable.
+broadcast-loop fit) are kept in vector.py / re-built here exactly so
+the equivalence stays executable.
 """
 
 from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from ndl_core_data_pipeline_spark.operators import vector as V
@@ -77,7 +79,7 @@ CENT_SETS = {
 
 
 def _hof_argmin(df, cents_rows, with_d2):
-    """The r19 reference: crossJoin the one-row struct array, HOF argmin."""
+    """The HOF reference: crossJoin the one-row struct array, HOF argmin."""
     cdf = df.sparkSession.createDataFrame(
         cents_rows, "cell_id long, centroid array<double>"
     )
@@ -127,14 +129,14 @@ def test_nearest_arrow_matches_hof_on_real_embeddings(spark, sf_small):
 
 
 def test_kmeans_rows_bitwise_equals_broadcast_loop(spark, sf_small):
-    """Driver-loop Lloyd == the r19 broadcast-loop fit, bit for bit."""
+    """Driver-loop Lloyd == the HOF broadcast-loop fit, bit for bit."""
     from ndl_core_data_pipeline_spark.io import load
 
     emb = load(spark, sf_small, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
 
-    # r19 reference fit (broadcast struct-row + HOF argmin per round)
+    # reference fit (broadcast struct-row + HOF argmin per round)
     cents = emb.filter(F.col("vec_id") < V.KMEANS_K).select(
         F.col("vec_id").alias("cell_id"), F.col("v").alias("centroid")
     )
@@ -173,7 +175,7 @@ def test_kmeans_rows_bitwise_equals_broadcast_loop(spark, sf_small):
 
 
 def _hof_encode(df, cw, with_d2):
-    """The r19 reference: slice-explode + broadcast cw join + HOF argmin."""
+    """The HOF reference: slice-explode + broadcast cw join + HOF argmin."""
     spark = df.sparkSession
     subs = V._slice_subs(df, "v", ("vec_id",))
     cw_df = spark.createDataFrame(
@@ -211,7 +213,7 @@ def test_pq_encode_arrow_matches_hof_on_hostile_inputs(spark):
     for tag, cw in cw_sets.items():
         old = _hof_encode(hdf, cw, with_d2=True)
         new = V._pq_encode_arrow(
-            hdf, cw, keep=("vec_id",), v_name="v", with_d2=True
+            hdf, cw, keep=("vec_id",), v_name="v", id_sql_type="int", with_d2=True
         )
         a = {(r["vec_id"], r["m"]): (r["code"], r["d2"]) for r in old.collect()}
         b = {(r["vec_id"], r["m"]): (r["code"], r["d2"]) for r in new.collect()}
@@ -294,22 +296,76 @@ def test_lsh_bands_arrow_matches_sql_hof(spark):
     assert a == b
 
 
-def test_cos_verify_arrow_matches_hof(spark):
+def test_dense_rows_marks_clean_32_dim_batch_clean():
+    """A clean batch of 32-dim vectors is all clean at width 32, so the
+    cosine verify of 32-dim corpora runs vectorized, not per row."""
+    import numpy as np
+    import pyarrow as pa
+
+    rows = [[0.5 * i + r for i in range(32)] for r in range(5)]
+    clean, M = V._dense_rows(pa.array(rows, pa.list_(pa.float32())), 32)
+    assert clean.tolist() == [True] * 5
+    assert np.array_equal(M, np.array(rows, dtype=np.float32).astype(np.float64))
+
+
+def test_cos_verify_ragged_first_row_keeps_batch_vectorized(spark, monkeypatch):
+    """The verify kernel's width is the batch's most common vector
+    length: a ragged FIRST row takes the scalar path alone, and the
+    well-formed rows after it stay vectorized with exact folds."""
+    from unittest import mock
+
+    import pyarrow as pa
+
+    kernels = []
+
+    def capture(df, fn, **kw):
+        kernels.append(fn)
+        return mock.MagicMock()
+
+    monkeypatch.setattr(V, "arrow_map", capture)
+    V._cos_verify_arrow(None, keep=())
+    scalar_rows = []
+    fold_dot = V._fold_dot
+
+    def counting_fold_dot(a, b):
+        scalar_rows.append((a, b))
+        return fold_dot(a, b)
+
+    monkeypatch.setattr(V, "_fold_dot", counting_fold_dot)
+    a = [[1.0, 2.0, 3.0]] + [[0.25 * i + r for i in range(32)] for r in range(4)]
+    b = [[3.0, 2.0, 1.0]] + [[0.5 * i - r for i in range(32)] for r in range(4)]
+    t = pa.list_(pa.float32())
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(a, t), pa.array(b, t)], ["emb_a", "emb_b"]
+    )
+    rows, (dot, sa, sb) = kernels[0](batch)
+    assert rows is None
+    assert len(scalar_rows) == 3  # dot, sa, sb of the ragged row only
+    f32 = [[float(pa.scalar(x, pa.float32()).as_py()) for x in v] for v in a + b]
+    fa, fb = f32[: len(a)], f32[len(a):]
+    assert dot.to_pylist() == [fold_dot(x, y) for x, y in zip(fa, fb)]
+    assert sa.to_pylist() == [fold_dot(x, x) for x in fa]
+    assert sb.to_pylist() == [fold_dot(y, y) for y in fb]
+
+
+@pytest.mark.parametrize("dim", [64, 32, 256])
+def test_cos_verify_arrow_matches_hof(spark, dim):
     """Arrow cosine == the _dot/_norm HOF quotient bitwise, including
-    zero-norm (Inf/NaN), NULL-element, and ragged-length pairs."""
+    zero-norm (Inf/NaN), NULL-element, and ragged-length pairs, at the
+    registered 64-dim width and at other widths."""
     import struct as st
 
     vecs = {
-        1: [0.1 * i for i in range(64)],
-        2: [0.2 * (64 - i) for i in range(64)],
-        3: [0.0] * 64,                         # zero norm -> NaN/Inf
-        4: [float("nan")] + [1.0] * 63,
-        5: [float("inf")] + [1.0] * 63,
-        6: [None] + [1.0] * 63,
-        7: [1.0] * 32,                         # short but EQUAL lengths work
-        8: [2.0] * 32,
+        1: [0.1 * i for i in range(dim)],
+        2: [0.2 * (dim - i) for i in range(dim)],
+        3: [0.0] * dim,                        # zero norm -> NaN/Inf
+        4: [float("nan")] + [1.0] * (dim - 1),
+        5: [float("inf")] + [1.0] * (dim - 1),
+        6: [None] + [1.0] * (dim - 1),
+        7: [1.0] * (dim // 2),                 # short but EQUAL lengths work
+        8: [2.0] * (dim // 2),
         9: None,
-        10: [3.0] * 64,
+        10: [3.0] * dim,
     }
     # engine conditions: every query path calls io.load ->
     # ensure_session_defaults, which sets ansi=false (so a zero-norm
